@@ -17,8 +17,15 @@ airflow_dags.py:178-314): one day's slice re-written to the gold store.
 
 Small-file problem: the reference ingests 1 row/coin/tick
 (airflow_dags.py:35 limit=1) — naive translation writes pathological tiny
-files. ``compact_day`` is the daily compaction job; the streaming variant
-in etl_project_spark.streaming buffers in micro-batches instead.
+files, ~288 per coin per day. Every bronze day read (the tick's key scan,
+``export_day``, ``compact_day``) goes through ``_read_days``, which packs
+the day's files into one wave of ``defaultParallelism`` tasks: a scan
+split into one task per handful of one-bar files pays per-task overhead
+on every split, and a day is bounded by its cadence, so the packed tasks
+stay small at any store size. ``export_day`` counts its rows on the write
+job itself, so the day is scanned once. ``compact_day`` is the daily
+compaction job; the streaming variant in etl_project_spark.streaming
+buffers in micro-batches instead.
 """
 
 from __future__ import annotations
@@ -26,7 +33,8 @@ from __future__ import annotations
 import datetime as dt
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_project_spark.session import prepare
@@ -63,8 +71,6 @@ def ingest_tick(
     df = source.to_df(spark, rows)
     if dedupe:
         df = _drop_already_ingested(spark, df, rows, bronze_path)
-    from pyspark.sql import Observation
-
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("n"))
     append_bars(df, bronze_path)
@@ -79,26 +85,50 @@ def _drop_already_ingested(
 ) -> DataFrame:
     """Anti-join a (tiny) fetched batch against the bronze keys it could
     collide with. Reads only the batch's own (period_date, coin)
-    partitions; returns ``df`` unchanged when bronze doesn't exist yet."""
-    try:
-        existing = spark.read.parquet(bronze_path)
-    except Exception:  # first tick: no bronze store yet
-        return df
+    partitions; returns ``df`` unchanged when bronze doesn't exist yet.
+    The keys need no ``distinct()``: a left-anti build side only answers
+    "is there a match"."""
     dates = sorted({str(r["time_period_start"])[:10] for r in rows})
     coins = sorted({r["coin"] for r in rows})
-    keys = (
-        existing.filter(
-            F.col("period_date").isin(dates) & F.col("coin").isin(coins)
-        )
-        .select("coin", "time_period_start")
-        .distinct()
+    try:
+        existing = _read_days(spark, bronze_path, dates)
+    except AnalysisException:  # first tick: no bronze store yet
+        return df
+    keys = existing.filter(F.col("coin").isin(coins)).select(
+        "coin", "time_period_start"
     )
     return df.join(F.broadcast(keys), ["coin", "time_period_start"], "left_anti")
+
+
+def _read_days(
+    spark: SparkSession, path: str, dates: Iterable[str | dt.date]
+) -> DataFrame:
+    """The rows of the given ``period_date`` partitions, scanned in one
+    wave of ``defaultParallelism`` tasks (see the module docstring)."""
+    days = [F.lit(str(d)).cast("date") for d in dates]
+    return (
+        spark.read.parquet(path)
+        .filter(F.col("period_date").isin(*days))
+        .coalesce(spark.sparkContext.defaultParallelism)
+    )
 
 
 def append_bars(df: DataFrame, bronze_path: str) -> None:
     """K1′: append to the partitioned bronze store."""
     df.write.mode("append").partitionBy(*PARTITION_COLS).parquet(bronze_path)
+
+
+def _overwrite_partitions(df: DataFrame, path: str) -> None:
+    """Idempotent write of ``df``'s (period_date, coin) partitions: the
+    dynamic overwrite replaces exactly the partitions ``df`` holds rows
+    for. Set per write, so the session's own overwrite mode is left
+    alone for every other writer."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*PARTITION_COLS)
+        .parquet(path)
+    )
 
 
 def export_day(
@@ -108,17 +138,16 @@ def export_day(
 
     Dynamic partition overwrite = the Spark-native replacement for the
     CSV → S3 → Redshift COPY chain (K2/K3/K4): the partitioned gold
-    Parquet *is* the warehouse table. Returns rows exported."""
+    Parquet *is* the warehouse table. Returns rows exported, counted by
+    an ``Observation`` on the write job; a day with no bronze rows
+    writes no partition and leaves the other gold days as they were."""
     prepare(spark)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    day = (
-        spark.read.parquet(bronze_path)
-        .filter(F.col("period_date") == F.lit(str(ds)).cast("date"))
+    obs = Observation()
+    day = _read_days(spark, bronze_path, [ds]).observe(
+        obs, F.count(F.lit(1)).alias("n")
     )
-    n = day.count()
-    if n:
-        day.write.mode("overwrite").partitionBy(*PARTITION_COLS).parquet(gold_path)
-    return n
+    _overwrite_partitions(day, gold_path)
+    return int(obs.get["n"])
 
 
 def compact_day(
@@ -128,16 +157,8 @@ def compact_day(
     writes ~288 tiny files/coin/day): rewrite the partition at
     target_files per coin via repartition, idempotent overwrite."""
     prepare(spark)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    day = spark.read.parquet(path).filter(
-        F.col("period_date") == F.lit(str(ds)).cast("date")
-    )
-    (
-        day.repartition(target_files, "coin")
-        .write.mode("overwrite")
-        .partitionBy(*PARTITION_COLS)
-        .parquet(path)
-    )
+    day = _read_days(spark, path, [ds])
+    _overwrite_partitions(day.repartition(target_files, "coin"), path)
 
 
 def fake_bars(

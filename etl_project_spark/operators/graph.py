@@ -141,7 +141,9 @@ def _oriented(edges: DataFrame) -> DataFrame:
 # Sorted packed edge-key array (a * 2^32 + b, a < b by id), broadcast
 # once per (application, sf_dir, fingerprint) — the same process-scoped
 # intermediate memo discipline as _GR_EDGES (dies with the
-# SparkContext; never carries results across driver invocations).
+# SparkContext; never carries results across driver invocations). A new
+# fingerprint for an (application, sf_dir) destroys the broadcast it
+# supersedes, so a regenerated fixture frees the stale keys' memory.
 _GR_EDGE_KEYS: dict[tuple, object] = {}
 
 
@@ -159,6 +161,8 @@ def _edge_key_broadcast(spark: SparkSession, sf_dir: str, edges: DataFrame):
         (F.col("a") * _GR_PACK + F.col("b")).alias("k")
     ).toPandas()
     keys = np.sort(pdf["k"].to_numpy(dtype=np.int64, copy=True))
+    for stale in [k for k in _GR_EDGE_KEYS if k[:2] == key[:2]]:
+        _GR_EDGE_KEYS.pop(stale).destroy()
     bc = spark.sparkContext.broadcast(keys)
     _GR_EDGE_KEYS[key] = bc
     return bc

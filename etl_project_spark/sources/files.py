@@ -51,9 +51,11 @@ def with_surrogate_id(
       configurable), the faithful SERIAL re-expression: per-partition
       row counts are collected (O(#partitions) driver state — the pp6
       two-phase prefix-sum pattern, never a corpus-sized
-      single-partition window), cumulative offsets broadcast back, and
-      an Arrow kernel stamps ``offset + position`` streaming through
-      each partition in order. With ``order_by`` (must be a total
+      single-partition window) and their cumulative offsets come back
+      as a literal map. Each row's id is ``offset[partition] +
+      position``, computed in the JVM with no Python worker: the
+      position is the low 33 bits of the ``monotonically_increasing_id``
+      tagged next to the partition id. With ``order_by`` (must be a total
       order — include a tiebreaker) the frame is range-partitioned and
       sorted first, making the numbering DETERMINISTIC across runs;
       without it, ids are dense but follow the incoming partition
@@ -68,7 +70,6 @@ def with_surrogate_id(
         )
     if mode != "dense":
         raise ValueError(f"mode must be 'unique' or 'dense', got {mode!r}")
-    import numpy as np
     from pyspark.sql import functions as F
 
     if order_by:
@@ -80,43 +81,30 @@ def with_surrogate_id(
     # each pass would otherwise re-execute the lineage, and a re-run of
     # repartitionByRange can sample different range bounds — the
     # pid->count map from pass 1 would then describe partitions pass 2
-    # never sees (silent id overlap). The checkpoint pins one physical
-    # partitioning both passes read; an export slice is day-bounded, so
+    # never sees (silent id overlap). The checkpoint also freezes the
+    # non-deterministic position tag. An export slice is day-bounded, so
     # the materialization is small even at warehouse scale.
-    tagged = df.withColumn(
-        "__sid_pid", F.spark_partition_id()
+    tagged = df.select(
+        "*",
+        F.spark_partition_id().alias("__sid_pid"),
+        F.monotonically_increasing_id().alias("__sid_mid"),
     ).localCheckpoint()
     counts = {
         r["__sid_pid"]: r["count"]
         for r in tagged.groupBy("__sid_pid").count().collect()
     }
-    offsets: dict[int, int] = {}
+    offsets = []
     acc = start
     for p in sorted(counts):
-        offsets[p] = acc
+        offsets += [F.lit(p), F.lit(acc).cast("long")]
         acc += counts[p]
-    boff = df.sparkSession.sparkContext.broadcast(offsets)
-    out_cols = [col_name] + df.columns
-    schema = f"{col_name} long, " + ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
+    pid = F.col("__sid_pid")
+    position = F.col("__sid_mid") - F.shiftleft(pid.cast("long"), 33)
+    # an empty frame has no offsets, and an empty map() cannot be indexed
+    sid = (F.create_map(*offsets)[pid] + position) if offsets else F.lit(None)
+    return tagged.select(sid.cast("long").alias(col_name), "*").drop(
+        "__sid_pid", "__sid_mid"
     )
-
-    def stamp(batches):
-        pos = 0
-        base = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if base is None:
-                base = boff.value[int(pdf["__sid_pid"].iloc[0])]
-            pdf = pdf.copy()
-            pdf[col_name] = np.arange(
-                base + pos, base + pos + len(pdf), dtype=np.int64
-            )
-            pos += len(pdf)
-            yield pdf[out_cols]
-
-    return tagged.mapInPandas(stamp, schema=schema)
 
 
 def write_csv_export(

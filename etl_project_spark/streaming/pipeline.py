@@ -234,12 +234,8 @@ def partition_overwrite_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
-            batch_df.sparkSession.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-        )
-        (
             batch_df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_col)
             .parquet(gold_dir)
         )

@@ -93,6 +93,99 @@ def test_compact_day(spark, tmp_path):
     assert after_df.count() == before  # content preserved
 
 
+def _partition_bytes(root) -> dict[str, bytes]:
+    """Every data file under a partitioned store, by relative path."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            if "=" in d and not f.startswith((".", "_")):
+                path = os.path.join(d, f)
+                with open(path, "rb") as fh:
+                    out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
+def test_day_writers_keep_session_overwrite_mode(spark, tmp_path):
+    """export_day and compact_day overwrite partitions dynamically per
+    write: the session's partitionOverwriteMode is left as it was, and
+    another day's gold partition survives the export."""
+    bronze, gold = str(tmp_path / "b"), str(tmp_path / "g")
+    src = OhlcvRestSource("k")
+    for start in ("2023-04-26T00:00:00", "2023-04-27T00:00:00"):
+        bars = ohlcv.fake_bars(start=start + ".0000000Z", n_bars=2)
+        ohlcv.append_bars(src.to_df(spark, bars), bronze)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")  # the default: a full overwrite
+    assert ohlcv.export_day(spark, bronze, gold, "2023-04-26") == 6
+    assert ohlcv.export_day(spark, bronze, gold, "2023-04-27") == 6
+    ohlcv.compact_day(spark, bronze, "2023-04-26")
+    assert spark.conf.get(key) == "static"
+    days = spark.read.parquet(gold).groupBy("period_date").count()
+    gold_days = {str(r["period_date"]): r["count"] for r in days.collect()}
+    assert gold_days == {"2023-04-26": 6, "2023-04-27": 6}
+    assert spark.read.parquet(bronze).count() == 12
+
+
+def test_export_day_empty_day_writes_nothing(spark, tmp_path):
+    """A date with no bronze rows exports 0 rows, writes no partition,
+    and leaves the gold days already there byte-for-byte intact."""
+    import os
+
+    bronze, gold = str(tmp_path / "b"), str(tmp_path / "g")
+    src = OhlcvRestSource("k")
+    ohlcv.append_bars(src.to_df(spark, ohlcv.fake_bars(n_bars=3)), bronze)
+    assert ohlcv.export_day(spark, bronze, gold, "2023-04-26") == 9
+    before = _partition_bytes(gold)
+    assert ohlcv.export_day(spark, bronze, gold, "2023-04-25") == 0
+    assert _partition_bytes(gold) == before
+    assert sorted(d for d in os.listdir(gold) if "=" in d) == [
+        "period_date=2023-04-26"
+    ]
+
+
+def test_ingest_tick_dedupe_over_many_one_bar_files(spark, tmp_path):
+    """Dedupe against a realistic bronze day: one file per bar per coin
+    (the 5-minute cadence's layout), so the existing-keys scan packs
+    many tiny files per task. A replay of an older bar keeps nothing,
+    a new bar keeps one row per coin, and its replay keeps nothing."""
+    import os
+
+    bronze = str(tmp_path / "bronze")
+    n_bars = 60
+    bars = ohlcv.fake_bars(n_bars=n_bars + 1)
+    new_bar_start = bars[n_bars]["time_period_start"]
+    day = [b for b in bars if b["time_period_start"] < new_bar_start]
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try:
+        ohlcv.append_bars(OhlcvRestSource("k").to_df(spark, day), bronze)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    for coin in ("bitcoin", "ethereum", "ripple"):
+        part = os.path.join(bronze, "period_date=2023-04-26", f"coin={coin}")
+        files = [f for f in os.listdir(part) if f.endswith(".parquet")]
+        assert len(files) == n_bars
+
+    def serving(i):
+        def fetcher(url, headers):
+            sym = url.split("/")[-2].split("_")[2]
+            coin = {"BTC": "bitcoin", "ETH": "ethereum", "XRP": "ripple"}[sym]
+            return [
+                {k: v for k, v in b.items() if k != "coin"}
+                for b in bars
+                if b["coin"] == coin
+            ][i : i + 1]
+
+        return OhlcvRestSource("k", fetcher=fetcher)
+
+    assert ohlcv.ingest_tick(spark, serving(n_bars // 3), bronze, dedupe=True) == 0
+    assert ohlcv.ingest_tick(spark, serving(n_bars), bronze, dedupe=True) == 3
+    assert ohlcv.ingest_tick(spark, serving(n_bars), bronze, dedupe=True) == 0
+    keys = spark.read.parquet(bronze).select("coin", "time_period_start")
+    assert keys.count() == keys.distinct().count() == 3 * (n_bars + 1)
+
+
 def test_csv_export_contract(spark, tmp_path):
     """K2: headerless, id first — column order load-bearing (SURVEY.md §1)."""
     path = str(tmp_path / "csv")
@@ -619,6 +712,13 @@ def test_surrogate_id_dense_deterministic(spark):
     assert sorted((r["id"], r["k"], r["v"]) for r in again) == sorted(
         (r["id"], r["k"], r["v"]) for r in rows
     )
+    # without order_by: dense over the incoming partitions as they are,
+    # stamped in the JVM (no Python worker in the executed plan)
+    unordered = with_surrogate_id(df.repartition(7), mode="dense")
+    assert sorted(r["id"] for r in unordered.collect()) == list(range(1, 1001))
+    for dense in (out, unordered):
+        plan = dense._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan
 
 
 def test_surrogate_id_unique_mode(spark):

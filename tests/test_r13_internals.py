@@ -148,3 +148,28 @@ def test_two_rounding_alpha_form_overshoots_where_int_form_is_exact():
     assert (bound * (p + q) >= s * p) and not (
         (bound - 1) * (p + q) >= s * p
     )
+
+
+def test_edge_key_broadcast_destroys_superseded_fingerprint(spark, tmp_path):
+    """A new lineitem fingerprint under the same (application, sf_dir)
+    replaces the memoized edge-key broadcast and destroys the old one.
+    Runs on a copy of the fixture table: the committed fixtures are
+    never rewritten."""
+    import os
+    import shutil
+
+    from etl_project_spark.operators import graph
+
+    sf = str(tmp_path)
+    shutil.copy(f"{SF_DIR}/lineitem.parquet", f"{sf}/lineitem.parquet")
+    edges = spark.createDataFrame([(1, 2), (1, 3)], "a long, b long")
+    old = graph._edge_key_broadcast(spark, sf, edges)
+    assert graph._edge_key_broadcast(spark, sf, edges) is old
+    os.utime(f"{sf}/lineitem.parquet", ns=(0, 0))  # a regenerated table
+    new = graph._edge_key_broadcast(spark, sf, edges)
+    assert new is not old
+    assert not old._jbroadcast.isValid() and new._jbroadcast.isValid()
+    assert list(new.value) == [(1 << 32) + 2, (1 << 32) + 3]
+    mine = [k for k in graph._GR_EDGE_KEYS if k[1] == sf]
+    assert len(mine) == 1
+    graph._GR_EDGE_KEYS.pop(mine[0]).destroy()
