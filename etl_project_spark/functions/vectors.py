@@ -1,9 +1,13 @@
 """Vector functions over array<float|double> embedding columns.
 
-All built-in higher-order functions (JVM-evaluated, codegen'd) — chosen
-over Pandas UDFs for the hot path because they avoid the Arrow hop; the
-batched-numpy variants for LSH/IVF live in operators/similarity.py where
-Python is genuinely needed.
+All built-in higher-order functions (JVM-evaluated, no Arrow hop).
+``cosine_sim`` is the one shortlist scoring kernel: every exact rerank
+in operators/similarity.py scores with it (``_cosine_top_k``, which
+``_rerank`` calls for the shortlist paths). It was faster than an
+einsum pandas UDF on x3 and x9 and than an in-order Arrow pairwise UDF
+on x20, with identical rows. The one Arrow scoring path is the
+all-pairs ``_query_cosine_scores`` (x1, rk4), pinned bit for bit to
+this fold.
 
 Accumulation is sequential left-to-right (F.aggregate), matching DuckDB's
 list_dot_product fold order so differential tests agree bit-for-bit in
@@ -12,8 +16,6 @@ the common case.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -44,23 +46,3 @@ def l2_dist(a: Column, b: Column) -> Column:
             lambda acc, x: acc + x,
         )
     )
-
-
-def cosine_sim_batched() -> "Column":
-    """Arrow-batched numpy cosine: one einsum per batch instead of an
-    interpreted per-element fold (HigherOrderFunctions don't participate
-    in whole-stage codegen — the fold form measures ~10-30x slower on
-    wide candidate sets). Use for approximate paths (LSH/IVF rerank)
-    where bit-identical fold order vs the DuckDB oracle isn't required;
-    oracle-checked exact paths keep the sequential `cosine_sim`."""
-    @F.pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        m_a = np.vstack(a.to_numpy()).astype(np.float64)
-        m_b = np.vstack(b.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", m_a, m_b)
-        den = np.linalg.norm(m_a, axis=1) * np.linalg.norm(m_b, axis=1)
-        return pd.Series(np.where(den == 0.0, 0.0, num / np.where(den == 0.0, 1.0, den)))
-
-    return _cos

@@ -1,12 +1,30 @@
 """Similarity search over the ``embeddings`` table (extension X3):
-exact brute-force top-k cosine as the verifiable baseline, plus two
-scale paths — random-hyperplane LSH bucketing and an IVF-style
-partitioned index.
+exact brute-force top-k cosine as the verifiable baseline, plus the
+approximate serving paths — sign-LSH buckets (x3/x6), IVF cells (x4,
+x14, the persisted IVF index), PQ/ADC shortlists (x9/x15), IVF+PQ
+(x19/x20, the persisted IVF-PQ index) and binary signatures (x17/x18,
+the persisted Hamming index).
 
-The exact path is pure JVM higher-order functions; the LSH/IVF paths use
-Arrow-batched ``mapInPandas`` (numpy matmul over whole batches — the one
-place Python genuinely beats per-row JVM expression trees, because the
-projection matrix lives in a broadcast and each batch is one GEMM).
+Every ANN query is a direct composition of a few shared stages:
+
+- ``_top_k``: the per-query ``row_number`` over (score, neighbor_id),
+  cut at k — every ranking and shortlist cut in this module;
+- ``_cosine_top_k``: exact cosine of (query, candidate) vector pairs,
+  then ``_top_k`` — the score-and-cut step of the candidate-join paths;
+- ``_rerank``: a (query_id, neighbor_id) shortlist joined to the
+  candidate vectors and the broadcast query vectors, then
+  ``_cosine_top_k`` — the exact-rerank tail of every shortlist path;
+- one numpy kernel per step: ``_unit_rows`` (row normaliser),
+  ``_ivf_cell_frame`` (IVF cell assignment, shared by index build and
+  append), ``_pq_codes`` (PQ encoding), ``_pq_luts`` and
+  ``_adc_shortlist`` (ADC scoring, shared by x9 and the IVF-PQ index).
+
+The one shortlist kernel is the sequential ``cosine_sim`` fold
+(functions/vectors.py): it was faster than an einsum pandas UDF on x3
+and x9 and than an in-order Arrow pairwise UDF on x20, with identical
+rows. ``_query_cosine_scores`` is the all-pairs path (x1,
+rk4), where an Arrow pass scores each candidate once against the whole
+bounded query set.
 """
 
 from __future__ import annotations
@@ -22,6 +40,104 @@ from etl_project_spark.registry import register
 
 N_QUERIES = 10  # vec_id < 10 are the query set in the test corpus
 TOP_K = 5
+
+
+def _vectors(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """(vec_id, *cols, e): the embeddings table with the vector cast to
+    array<double>, the form every scoring stage reads."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", *cols, F.col("embedding").cast("array<double>").alias("e")
+    )
+
+
+def _queries(df: DataFrame) -> DataFrame:
+    return df.filter(F.col("vec_id") < N_QUERIES)
+
+
+def _candidates(df: DataFrame) -> DataFrame:
+    return df.filter(F.col("vec_id") >= N_QUERIES)
+
+
+def _sides(df: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame]:
+    """A (vec_id, e, *cols) frame split into the pair schema: queries
+    as (query_id, qv, *cols), candidates as (neighbor_id, cv, *cols)."""
+    q = _queries(df).select(
+        F.col("vec_id").alias("query_id"), F.col("e").alias("qv"), *cols
+    )
+    c = _candidates(df).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv"), *cols
+    )
+    return q, c
+
+
+def _top_k(
+    df: DataFrame,
+    score: str,
+    k: int | Column,
+    rank: str = "nn_rank",
+    asc: bool = False,
+) -> DataFrame:
+    """Per-query top-k: ``rank`` is the row_number over (score,
+    neighbor_id) within each query_id, and rows with rank <= k stay
+    (every column of ``df`` rides along). ``k`` is an int or a per-row
+    Column (x20's probe-proportional shortlist). Scores rank
+    descending; ``asc`` ranks distances ascending."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.asc(score) if asc else F.desc(score), F.asc("neighbor_id")
+    )
+    return df.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
+    )
+
+
+def _cosine_top_k(pairs: DataFrame, k: int = TOP_K) -> DataFrame:
+    """(query_id, neighbor_id, nn_rank) from (query_id, neighbor_id, qv,
+    cv) pairs: exact cosine through the sequential ``cosine_sim`` fold
+    (the one shortlist kernel), then the per-query top-k."""
+    sims = pairs.select(
+        "query_id",
+        "neighbor_id",
+        cosine_sim(F.col("qv"), F.col("cv")).alias("sim"),
+    )
+    return _top_k(sims, "sim", k).drop("sim")
+
+
+def _rerank(
+    shortlist: DataFrame,
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int = TOP_K,
+) -> DataFrame:
+    """The one shortlist rerank: each (query_id, neighbor_id) of
+    ``shortlist`` fetches its candidate vector from ``vectors`` (a
+    join, so only |queries|·shortlist full vectors enter scoring),
+    picks up its query vector from the broadcast ``queries``, and
+    ``_cosine_top_k`` scores and cuts. ``vectors``/``queries`` are
+    (vec_id, e) frames; ``queries`` must stay bounded."""
+    cv = vectors.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv")
+    )
+    qv = queries.select(
+        F.col("vec_id").alias("query_id"), F.col("e").alias("qv")
+    )
+    return _cosine_top_k(
+        shortlist.select("query_id", "neighbor_id")
+        .join(cv, "neighbor_id")
+        .join(F.broadcast(qv), "query_id"),
+        k,
+    )
+
+
+def _unit_rows(M: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm (all-zero rows stay zero): the one
+    normaliser of every IVF/PQ kernel."""
+    return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+
+
+def _unit_batch(pdf: pd.DataFrame) -> np.ndarray:
+    """One Arrow batch's ``embedding`` column as unit float64 rows."""
+    M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+    return _unit_rows(M)
 
 
 def _query_cosine_scores(cand: DataFrame, queries: DataFrame) -> DataFrame:
@@ -124,18 +240,9 @@ def x1_topk_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, sim) pairs — k·|queries| rows survive. For large query
     sets, switch to per-partition top-k heaps + merge
     (see x3_topk_batched)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    sims = _query_cosine_scores(
-        emb.filter(F.col("vec_id") >= N_QUERIES),
-        emb.filter(F.col("vec_id") < N_QUERIES),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.select("query_id", "neighbor_id", F.row_number().over(w).alias("nn_rank"))
-        .filter(F.col("nn_rank") <= TOP_K)
-    )
+    emb = _vectors(spark, sf_dir)
+    sims = _query_cosine_scores(_candidates(emb), _queries(emb))
+    return _top_k(sims, "sim", TOP_K).drop("sim")
 
 
 @register(
@@ -251,42 +358,20 @@ def x3_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     selectivity, probes buy recall per-query with the candidate INDEX
     untouched — the right knob when the index is a stored table."""
     emb = load_table(spark, sf_dir, "embeddings")
-    emb_d = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb_d = _vectors(spark, sf_dir)
     qb = lsh_bucket_ids(
-        emb.filter(F.col("vec_id") < N_QUERIES),
-        n_tables=64,
-        n_planes=6,
-        probe_flips=1,
+        _queries(emb), n_tables=64, n_planes=6, probe_flips=1
     )
-    cb = lsh_bucket_ids(
-        emb.filter(F.col("vec_id") >= N_QUERIES), n_tables=64, n_planes=6
-    )
-    q = emb_d.join(qb, "vec_id").select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qv"), "table", "bucket"
-    )
-    c = emb_d.join(cb, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv"), "table", "bucket"
-    )
-    # same (table, bucket) → candidate; dedup pairs before the (cheap)
-    # rerank so each pair's cosine is computed once.
-    pairs = (
+    cb = lsh_bucket_ids(_candidates(emb), n_tables=64, n_planes=6)
+    q, _ = _sides(emb_d.join(qb, "vec_id"), "table", "bucket")
+    _, c = _sides(emb_d.join(cb, "vec_id"), "table", "bucket")
+    # same (table, bucket) → candidate; dedup pairs before the rerank
+    # so each pair's cosine is computed once.
+    return _cosine_top_k(
         F.broadcast(q)
         .join(c, ["table", "bucket"])
         .select("query_id", "qv", "neighbor_id", "cv")
         .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    from etl_project_spark.functions.vectors import cosine_sim_batched
-
-    cos = cosine_sim_batched()
-    sims = pairs.select(
-        "query_id", "neighbor_id", cos(F.col("qv"), F.col("cv")).alias("sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.select("query_id", "neighbor_id", F.row_number().over(w).alias("nn_rank"))
-        .filter(F.col("nn_rank") <= TOP_K)
     )
 
 
@@ -309,18 +394,14 @@ def x4_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_cells, nprobe = 8, 6
     emb = load_table(spark, sf_dir, "embeddings")
     # deterministic Lloyd-refined centroids (see ivf_centroids)
-    C = ivf_centroids(spark, sf_dir, n_cells)
-    bC = emb.sparkSession.sparkContext.broadcast(C)
+    bC = spark.sparkContext.broadcast(ivf_centroids(spark, sf_dir, n_cells))
 
     def assign(batches):
         cen = bC.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            sims = Mn @ cen.T
-            order = np.argsort(-sims, axis=1)
+            order = np.argsort(-(_unit_batch(pdf) @ cen.T), axis=1)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -332,28 +413,13 @@ def x4_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = emb.select("vec_id", "embedding").mapInPandas(
         assign, schema="vec_id long, cell int, probe_cells array<int>"
     )
-    emb_d = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    with_cells = emb_d.join(cells, "vec_id")
-    q = (
-        with_cells.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qv"),
-            F.explode("probe_cells").alias("cell"),
-        )
+    q, c = _sides(
+        _vectors(spark, sf_dir).join(cells, "vec_id"), "cell", "probe_cells"
     )
-    c = with_cells.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv"), "cell"
-    )
-    sims = F.broadcast(q).join(c, "cell").select(
-        "query_id", "neighbor_id", cosine_sim(F.col("qv"), F.col("cv")).alias("sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.dropDuplicates(["query_id", "neighbor_id"])
-        .select("query_id", "neighbor_id", F.row_number().over(w).alias("nn_rank"))
-        .filter(F.col("nn_rank") <= TOP_K)
-    )
+    # a candidate has one cell and a query's probe cells (one argsort
+    # row) are distinct, so every (query, neighbor) pair is unique
+    q = q.select("query_id", "qv", F.explode("probe_cells").alias("cell"))
+    return _cosine_top_k(F.broadcast(q).join(c.drop("probe_cells"), "cell"))
 
 
 @register(
@@ -397,8 +463,81 @@ def ivf_centroids(spark: SparkSession, sf_dir: str, n_cells: int) -> np.ndarray:
 
     if n_cells != KM_K:
         raise ValueError(f"IVF cells must match KM_K={KM_K}, got {n_cells}")
-    C = kmeans_centroids(spark, sf_dir)
-    return C / np.linalg.norm(C, axis=1, keepdims=True)
+    return _unit_rows(kmeans_centroids(spark, sf_dir))
+
+
+def _ivf_cell_frame(
+    df: DataFrame, centroids: np.ndarray, codebooks: np.ndarray | None = None
+) -> DataFrame:
+    """(vec_id, cell, e) for any (vec_id, embedding) frame: THE IVF
+    cell-assignment kernel, shared by :func:`build_ivf_index` and
+    :func:`append_to_ivf_index` so a built and an appended vector can
+    never be assigned differently (two drifting copies would break the
+    index silently — the :func:`_signature_frame` argument). With
+    ``codebooks`` it is the fused IVF-PQ pass, (vec_id, cell, codes).
+    One Arrow batch = one normalise, one GEMM against the unit
+    centroids and an argmax (plus the per-subspace PQ argmin)."""
+    bC = df.sparkSession.sparkContext.broadcast(
+        (_unit_rows(centroids), codebooks)
+    )
+
+    def assign(batches):
+        cen, books = bC.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = _unit_batch(pdf)
+            out = {
+                "vec_id": pdf["vec_id"].to_numpy(),
+                "cell": np.argmax(X @ cen.T, axis=1),
+            }
+            if books is None:
+                out["e"] = list(X)
+            else:
+                out["codes"] = list(_pq_codes(X, books))
+            yield pd.DataFrame(out)
+
+    tail = "e array<double>" if codebooks is None else "codes array<int>"
+    return df.select("vec_id", "embedding").mapInPandas(
+        assign, schema=f"vec_id long, cell int, {tail}"
+    )
+
+
+def _write_index(
+    spark: SparkSession, rows: DataFrame, table: str, part: str
+) -> None:
+    """(Re)build ``table`` as managed parquet PARTITIONED BY ``part``:
+    the partition layout IS the index. Idempotent (overwrite)."""
+    from etl_project_spark.sources.tables import _drop_table_and_location
+
+    _drop_table_and_location(spark, table)
+    (
+        rows.repartition(part)
+        .write.mode("overwrite")
+        .partitionBy(part)
+        .format("parquet")
+        .saveAsTable(table)
+    )
+
+
+def _append_index(rows: DataFrame, table: str, part: str) -> int:
+    """Append ``rows`` into the ``part`` partitions they land in (zero
+    shuffles of existing index rows) and return the rows appended,
+    counted by an Observation on the write job itself: one execution
+    of the lineage, exact even for a non-deterministic input
+    (streaming micro-batch, sample)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    (
+        rows.observe(obs, F.count(F.lit(1)).alias("n"))
+        .repartition(part)
+        .write.mode("append")
+        .partitionBy(part)
+        .format("parquet")
+        .saveAsTable(table)
+    )
+    return int(obs.get["n"])
 
 
 def build_ivf_index(
@@ -417,40 +556,9 @@ def build_ivf_index(
     Reference parity: the reference has no vector surface at all; this
     is the extension-mandate ANN scale path made durable (SURVEY §2h
     X3), complementing the in-session x4_ivf_topk."""
-    from etl_project_spark.sources.tables import _drop_table_and_location
-
-    emb = load_table(spark, sf_dir, "embeddings")
     C = ivf_centroids(spark, sf_dir, n_cells)
-    bC = spark.sparkContext.broadcast(C)
-
-    def assign(batches):
-        cen = bC.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Mn = M / np.maximum(
-                np.linalg.norm(M, axis=1, keepdims=True), 1e-12
-            )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell": np.argmax(Mn @ cen.T, axis=1),
-                    "e": list(Mn),
-                }
-            )
-
-    cells = emb.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id long, cell int, e array<double>"
-    )
-    _drop_table_and_location(spark, table)
-    (
-        cells.repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .format("parquet")
-        .saveAsTable(table)
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    _write_index(spark, _ivf_cell_frame(emb, C), table, "cell")
     return C
 
 
@@ -472,46 +580,9 @@ def append_to_ivf_index(
     is the detector for exactly this), rebuild with build_ivf_index —
     centroid refresh is a full-corpus decision, not an append-path one.
     """
-    bC = spark.sparkContext.broadcast(
-        centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+    return _append_index(
+        _ivf_cell_frame(new_vectors, centroids), table, "cell"
     )
-
-    def assign(batches):
-        cen = bC.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Mn = M / np.maximum(
-                np.linalg.norm(M, axis=1, keepdims=True), 1e-12
-            )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell": np.argmax(Mn @ cen.T, axis=1),
-                    "e": list(Mn),
-                }
-            )
-
-    cells = new_vectors.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id long, cell int, e array<double>"
-    )
-    # Count via Observation on the write job itself: one execution of
-    # the assignment lineage, and the returned count is the rows
-    # actually appended even for a non-deterministic input (streaming
-    # micro-batch, sample).
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    (
-        cells.observe(obs, F.count(F.lit(1)).alias("n"))
-        .repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    return int(obs.get["n"])
 
 
 # knob sweep (r6, near-uniform worst-case corpus): m=8/k=32 reads
@@ -559,8 +630,7 @@ def train_pq_codebooks(
         .limit(sample)
         .collect()
     )
-    X = np.vstack([r["e"] for r in rows])
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _unit_rows(np.vstack([r["e"] for r in rows]))
     dim = X.shape[1]
     assert dim % m == 0, (dim, m)
     sub = dim // m
@@ -570,8 +640,7 @@ def train_pq_codebooks(
         Xj = X[:, j * sub : (j + 1) * sub]
         C = Xj[rng.choice(len(Xj), size=k, replace=False)].copy()
         for _ in range(iters):
-            d2 = ((Xj[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
+            a = _nearest(Xj, C)
             for c in range(k):
                 pts = Xj[a == c]
                 if len(pts):
@@ -581,39 +650,103 @@ def train_pq_codebooks(
     return books
 
 
+def _nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest row of ``C`` (squared L2; the first
+    on ties)."""
+    return ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+
+
+def _pq_codes(X: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """The one PQ-code kernel: per subspace, the nearest codeword of
+    unit rows ``X`` — (n, m) int32 codes for (m, k, dim/m) codebooks."""
+    m, _, sub = books.shape
+    return np.stack(
+        [_nearest(X[:, j * sub : (j + 1) * sub], books[j]) for j in range(m)],
+        axis=1,
+    ).astype(np.int32)
+
+
+def _pq_luts(Q: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Per-query ADC lookup tables T[q, j, c] = Q_q's subspace j ·
+    codeword c of subspace j."""
+    m, _, sub = books.shape
+    return np.einsum("qjs,jcs->qjc", Q.reshape(len(Q), m, sub), books)
+
+
 def pq_encode(df: DataFrame, codebooks: np.ndarray) -> DataFrame:
     """Encode (vec_id, embedding) to PQ codes: per subspace, the index
     of the nearest codebook centroid — m bytes per vector instead of
     dim·4 (a 16× memory cut at dim=64, m=16), the compression that lets
     a 100 TB embedding corpus live in executor memory for ADC scans.
     One Arrow-batched argmin per subspace per batch; zero shuffles."""
-    spark = df.sparkSession
-    bC = spark.sparkContext.broadcast(codebooks)
+    bC = df.sparkSession.sparkContext.broadcast(codebooks)
 
     def encode(batches):
-        books = bC.value
-        m, _, sub = books.shape
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            X = X / np.maximum(
-                np.linalg.norm(X, axis=1, keepdims=True), 1e-12
-            )
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                Xj = X[:, j * sub : (j + 1) * sub]
-                d2 = ((Xj[:, None, :] - books[j][None, :, :]) ** 2).sum(
-                    axis=2
-                )
-                codes[:, j] = d2.argmin(axis=1)
             yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(), "codes": list(codes)}
+                {
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "codes": list(_pq_codes(_unit_batch(pdf), bC.value)),
+                }
             )
 
     return df.select("vec_id", "embedding").mapInPandas(
         encode, schema="vec_id long, codes array<int>"
     )
+
+
+def _adc_shortlist(
+    codes: DataFrame,
+    qids: np.ndarray,
+    luts: np.ndarray,
+    shortlist: int,
+    probes: np.ndarray | None = None,
+) -> DataFrame:
+    """The ADC shortlist stage: (query_id, neighbor_id) of each query's
+    top-``shortlist`` candidates of a (vec_id, codes[, cell]) frame by
+    lookup-table score (one gather-sum per query per Arrow batch — no
+    decompression). A candidate never scores against its own query id,
+    so an indexed query is not its own neighbour. ``probes`` (one row
+    of cell ids per query) restricts each query to its probed cells;
+    x9 is the case with no probing. Each batch emits at most
+    ``shortlist`` rows per query and ``_top_k`` merges the partials
+    (t2's heap-merge shape)."""
+    bT = codes.sparkSession.sparkContext.broadcast((qids, luts, probes))
+
+    def adc(batches):
+        ids, tabs, probe = bT.value
+        ar = np.arange(tabs.shape[1])
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            C = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
+            vids = pdf["vec_id"].to_numpy()
+            cells = None if probe is None else pdf["cell"].to_numpy()
+            out_q, out_n, out_s = [], [], []
+            for qi, qid in enumerate(ids):
+                keep = vids != qid
+                if probe is not None:
+                    keep &= np.isin(cells, probe[qi])
+                sel = np.nonzero(keep)[0]
+                scores = tabs[qi][ar[None, :], C[sel]].sum(axis=1)
+                top = np.argsort(-scores)[:shortlist]
+                out_q.append(np.full(len(top), qid))
+                out_n.append(vids[sel[top]])
+                out_s.append(scores[top])
+            yield pd.DataFrame(
+                {
+                    "query_id": np.concatenate(out_q),
+                    "neighbor_id": np.concatenate(out_n),
+                    "adc": np.concatenate(out_s),
+                }
+            )
+
+    partial = codes.mapInPandas(
+        adc, schema="query_id long, neighbor_id long, adc double"
+    )
+    return _top_k(partial, "adc", shortlist, rank="r")
 
 
 @register("x9_pq_topk", oracle=None)  # approximate — rows-only
@@ -637,88 +770,15 @@ def x9_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs. Rows-only: the output is defined by the trained codebooks,
     not SQL-expressible math."""
     books = train_pq_codebooks(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    q_rows = sorted(
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    Q = np.vstack([r["e"] for r in q_rows])
-    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    emb = _vectors(spark, sf_dir)
+    q_rows = sorted(_queries(emb).collect(), key=lambda r: r["vec_id"])
     qids = np.array([r["vec_id"] for r in q_rows])
-    m, k, sub = books.shape
-    # per-query ADC lookup tables: T[q, j, c] = q_sub(j) · book[j][c]
-    T = np.einsum("qjs,jcs->qjc", Q.reshape(len(Q), m, sub), books)
-    bT = spark.sparkContext.broadcast((qids, T))
-    codes = pq_encode(emb.filter(F.col("vec_id") >= N_QUERIES), books)
-
-    def adc(batches):
-        ids, tabs = bT.value
-        nq, m_, _ = tabs.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
-            vids = pdf["vec_id"].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            ar = np.arange(m_)
-            for qi in range(nq):
-                scores = tabs[qi][ar[None, :], C].sum(axis=1)
-                top = np.argsort(-scores)[:PQ_SHORTLIST]
-                out_q.append(np.full(len(top), ids[qi]))
-                out_n.append(vids[top])
-                out_s.append(scores[top])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc": np.concatenate(out_s),
-                }
-            )
-
-    partial = codes.mapInPandas(
-        adc, schema="query_id long, neighbor_id long, adc double"
+    luts = _pq_luts(_unit_rows(np.vstack([r["e"] for r in q_rows])), books)
+    codes = pq_encode(
+        _candidates(load_table(spark, sf_dir, "embeddings")), books
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        partial.withColumn("r", F.row_number().over(ws))
-        .filter(F.col("r") <= PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    # exact rerank of the shortlist only
-    cand = shortlist.join(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").cast("array<double>").alias("cv"),
-        ),
-        "neighbor_id",
-    )
-    qdf = spark.createDataFrame(
-        [(int(r["vec_id"]), [float(x) for x in r["e"]]) for r in q_rows],
-        "query_id long, qv array<double>",
-    )
-    from etl_project_spark.functions.vectors import cosine_sim_batched
-
-    cos = cosine_sim_batched()
-    sims = cand.join(F.broadcast(qdf), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        cos(F.col("qv"), F.col("cv")).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.select(
-            "query_id",
-            "neighbor_id",
-            F.row_number().over(w).alias("nn_rank"),
-        )
-        .filter(F.col("nn_rank") <= TOP_K)
-    )
+    short = _adc_shortlist(codes, qids, luts, PQ_SHORTLIST)
+    return _rerank(short, emb, spark.createDataFrame(q_rows, emb.schema))
 
 
 def build_ivfpq_index(
@@ -735,52 +795,10 @@ def build_ivfpq_index(
     per-subspace argmin fused in a single Arrow kernel). Returns
     (centroids, codebooks); the full vectors stay in the source table
     — the refine step fetches only |queries|·shortlist of them."""
-    from etl_project_spark.sources.tables import _drop_table_and_location
-
-    emb = load_table(spark, sf_dir, "embeddings")
     C = ivf_centroids(spark, sf_dir, n_cells)
     books = train_pq_codebooks(spark, sf_dir)
-    bC = spark.sparkContext.broadcast(
-        (C / np.linalg.norm(C, axis=1, keepdims=True), books)
-    )
-
-    def assign_encode(batches):
-        cen, bks = bC.value
-        m, _, sub = bks.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Mn = M / np.maximum(
-                np.linalg.norm(M, axis=1, keepdims=True), 1e-12
-            )
-            codes = np.empty((len(Mn), m), dtype=np.int32)
-            for j in range(m):
-                Xj = Mn[:, j * sub : (j + 1) * sub]
-                codes[:, j] = (
-                    ((Xj[:, None, :] - bks[j][None, :, :]) ** 2)
-                    .sum(axis=2)
-                    .argmin(axis=1)
-                )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell": np.argmax(Mn @ cen.T, axis=1),
-                    "codes": list(codes),
-                }
-            )
-
-    rows = emb.select("vec_id", "embedding").mapInPandas(
-        assign_encode, schema="vec_id long, cell int, codes array<int>"
-    )
-    _drop_table_and_location(spark, table)
-    (
-        rows.repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .format("parquet")
-        .saveAsTable(table)
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    _write_index(spark, _ivf_cell_frame(emb, C, books), table, "cell")
     return C, books
 
 
@@ -798,95 +816,26 @@ def query_ivfpq_index(
     """Serve top-k from the IVF-PQ index: probe cells become a static
     ``cell IN (...)`` partition filter (only those directories are
     read — pinned in tests/test_layout.py), ADC scores the probed
-    cells' CODES through per-query lookup tables, a window merges the
-    per-partition shortlists, and the refine step joins the shortlist
-    ids back to the source embeddings for an exact rerank — the
-    compressed index serves the scan; full vectors are fetched for
-    |queries|·shortlist rows only."""
-    Cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    Q = np.array([qv for _, qv in queries], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    cells' CODES through per-query lookup tables (`_adc_shortlist`,
+    each query restricted to its own probed cells and never matched
+    to itself), and the refine step joins the shortlist ids back to
+    the source embeddings for an exact rerank — the compressed index
+    serves the scan; full vectors are fetched for |queries|·shortlist
+    rows only."""
+    Q = _unit_rows(np.array([qv for _, qv in queries], dtype=np.float64))
     qids = np.array([qid for qid, _ in queries])
-    probe = np.argsort(-(Qn @ Cn.T), axis=1)[:, :nprobe]
-    cells = sorted({int(c) for row in probe for c in row})
-    m, _, sub = codebooks.shape
-    T = np.einsum("qjs,jcs->qjc", Qn.reshape(len(Qn), m, sub), codebooks)
-    # per-query probed-cell sets: a candidate only scores for queries
-    # probing its cell
-    qcells = {int(qids[i]): {int(c) for c in probe[i]} for i in range(len(qids))}
-    bT = spark.sparkContext.broadcast((qids, T, qcells))
-    idx = spark.table(table).filter(F.col("cell").isin(cells))
-
-    def adc(batches):
-        ids, tabs, qc = bT.value
-        m_ = tabs.shape[1]
-        ar = np.arange(m_)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Cm = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
-            vids = pdf["vec_id"].to_numpy()
-            vcells = pdf["cell"].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            for qi, qid in enumerate(ids):
-                mask = np.isin(vcells, list(qc[int(qid)]))
-                if not mask.any():
-                    continue
-                scores = tabs[qi][ar[None, :], Cm[mask]].sum(axis=1)
-                top = np.argsort(-scores)[:shortlist]
-                sel = np.nonzero(mask)[0][top]
-                out_q.append(np.full(len(sel), qid))
-                out_n.append(vids[sel])
-                out_s.append(scores[top])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "adc": np.concatenate(out_s),
-                    }
-                )
-
-    partial = idx.mapInPandas(
-        adc, schema="query_id long, neighbor_id long, adc double"
+    probe = np.argsort(-(Q @ _unit_rows(centroids).T), axis=1)[:, :nprobe]
+    idx = spark.table(table).filter(
+        F.col("cell").isin(sorted({int(c) for c in probe.flat}))
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
-    )
-    short = (
-        partial.withColumn("r", F.row_number().over(ws))
-        .filter(F.col("r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    cand = short.join(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").cast("array<double>").alias("cv"),
-        ),
-        "neighbor_id",
+    short = _adc_shortlist(
+        idx, qids, _pq_luts(Q, codebooks), shortlist, probe
     )
     qdf = spark.createDataFrame(
         [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
-        "query_id long, qv array<double>",
+        "vec_id long, e array<double>",
     )
-    from etl_project_spark.functions.vectors import cosine_sim_batched
-
-    cos = cosine_sim_batched()
-    sims = cand.join(F.broadcast(qdf), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        cos(F.col("qv"), F.col("cv")).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.select(
-            "query_id", "neighbor_id", F.row_number().over(w).alias("nn_rank")
-        )
-        .filter(F.col("nn_rank") <= k)
-    )
+    return _rerank(short, _vectors(spark, sf_dir), qdf, k)
 
 
 def cell_occupancy(spark: SparkSession, table: str) -> dict[int, int]:
@@ -942,8 +891,7 @@ def query_ivf_index(
     partition filter — the scan reads ONLY those cell directories
     (pruning pinned in tests/test_layout.py). Inside the probed cells:
     broadcast the queries, equi-join on cell, exact rerank, top-k."""
-    Q = np.array([q for _, qv in queries for q in [qv]], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    Qn = _unit_rows(np.array([qv for _, qv in queries], dtype=np.float64))
     order = np.argsort(-(Qn @ centroids.T), axis=1)[:, :nprobe]
     qrows = [
         (int(qid), [float(x) for x in Qn[i]], int(c))
@@ -955,23 +903,18 @@ def query_ivf_index(
     )
     probed = sorted({c for _, _, c in qrows})
     idx = spark.table(table).filter(F.col("cell").isin(probed))
-    sims = (
+    return _cosine_top_k(
         F.broadcast(qdf)
         .join(idx, "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            cosine_sim(F.col("qv"), F.col("e")).alias("sim"),
+            "qv",
+            F.col("e").alias("cv"),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.dropDuplicates(["query_id", "neighbor_id"])
-        .select("query_id", "neighbor_id", F.row_number().over(w).alias("nn_rank"))
-        .filter(F.col("nn_rank") <= k)
+        .dropDuplicates(["query_id", "neighbor_id"]),
+        k,
     )
 
 
@@ -1043,9 +986,6 @@ def x6_rademacher_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplane source differs."""
     from etl_project_spark.functions.vectors import dot
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
     bucket = F.concat(
         *[
             F.when(
@@ -1056,29 +996,10 @@ def x6_rademacher_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for p in range(LSH_REF_PLANES)
         ]
     )
-    b = emb.select("vec_id", "e", bucket.alias("bucket"))
-    q = b.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qv"), "bucket"
+    q, c = _sides(
+        _vectors(spark, sf_dir).withColumn("bucket", bucket), "bucket"
     )
-    c = b.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv"), "bucket"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        F.broadcast(q)
-        .join(c, "bucket")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-        .select(
-            "query_id", "neighbor_id", F.row_number().over(w).alias("nn_rank")
-        )
-        .filter(F.col("nn_rank") <= TOP_K)
-    )
+    return _cosine_top_k(F.broadcast(q).join(c, "bucket"))
 
 
 @register(
@@ -1122,39 +1043,11 @@ def x8_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the same mining runs over the IVF/LSH candidate stream
     instead of the exact scan (x3/x4 with this predicate), trading the
     guarantee for probe cost like any ANN retrieval."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlab"),
-        F.col("e").alias("qv"),
-    )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("clab"),
-        F.col("e").alias("cv"),
-    )
-    sims = (
-        F.broadcast(q)
+    q, c = _sides(_vectors(spark, sf_dir, "label"), "label")
+    return _cosine_top_k(
+        F.broadcast(q.withColumnRenamed("label", "qlab"))
         .crossJoin(c)
-        .filter(F.col("qlab") != F.col("clab"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.select(
-            "query_id",
-            "neighbor_id",
-            F.row_number().over(w).alias("nn_rank"),
-        )
-        .filter(F.col("nn_rank") <= TOP_K)
+        .filter(F.col("qlab") != F.col("label"))
     )
 
 
@@ -1271,27 +1164,20 @@ def x10_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel across queries; never corpus-sized. The
     oracle unrolls the {MMR_K}-step greedy as a CTE chain (bpe1's
     fixed-round precedent)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qv")
-    )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES)
-    sq = F.round(cosine_sim(F.col("qv"), F.col("e")), 6)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sq"), F.asc("vec_id"))
-    sl = (
+    q, c = _sides(_vectors(spark, sf_dir))
+    sq = F.round(cosine_sim(F.col("qv"), F.col("cv")), 6)
+    sl = _top_k(
         F.broadcast(q)
         .crossJoin(c)
-        .select("query_id", "vec_id", "e", sq.alias("sq"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= MMR_SHORTLIST)
-        .drop("rn")
-    )
+        .select("query_id", "neighbor_id", "cv", sq.alias("sq")),
+        "sq",
+        MMR_SHORTLIST,
+        rank="rn",
+    ).drop("rn")
 
     def greedy(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        E = np.stack(pdf["e"].to_numpy()).astype(np.float64)
+        pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
+        E = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
         # accumulate dots/norms in INDEX order (k-major outer products),
         # bit-identical to the engines' sequential list_dot_product
         # fold — a GEMM's blocked/pairwise accumulation drifts at ulp
@@ -1313,7 +1199,7 @@ def x10_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.int64
         )
         sq_m = np.rint(pdf["sq"].to_numpy() * 1e6).astype(np.int64)
-        ids = pdf["vec_id"].to_numpy()
+        ids = pdf["neighbor_id"].to_numpy()
         n = len(pdf)
         selected: list[int] = []
         out = []
@@ -1509,34 +1395,16 @@ def x13_dim_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     join and aggregate. No new scale hazards beyond x1's intended
     bounded brute force; at 100 TB both arms run over the ANN
     shortlist instead (x12's pattern)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qv")
-    )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv")
-    )
+    q, c = _sides(_vectors(spark, sf_dir))
 
     def topk(qcol, ccol):
-        sims = F.broadcast(q).crossJoin(c).select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(qcol, ccol).alias("sim"),
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("sim"), F.asc("neighbor_id")
-        )
-        return (
-            sims.select(
-                "query_id",
-                "neighbor_id",
-                F.row_number().over(w).alias("r"),
+        return _cosine_top_k(
+            F.broadcast(q)
+            .crossJoin(c)
+            .select(
+                "query_id", "neighbor_id", qcol.alias("qv"), ccol.alias("cv")
             )
-            .filter(F.col("r") <= TOP_K)
-            .drop("r")
-        )
+        ).drop("nn_rank")
 
     full_k = topk(F.col("qv"), F.col("cv"))
     trunc_k = topk(
@@ -1642,43 +1510,16 @@ def x14_ivf_reference_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break to the lowest cell id — see its docstring; the r8
     constant-array + HOF form evaluated interpreted at ~0.45 s per
     2,000-row ranking pass)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = _ref_scan(
-        emb.filter(F.col("vec_id") < N_QUERIES),
-        want_ivf=True,
-        keep_e=True,
-    ).select(
+    emb = _vectors(spark, sf_dir)
+    q = _ref_scan(_queries(emb), want_ivf=True, keep_e=True).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qv"),
         F.explode("probes").alias("cell"),
     )
-    c = _ref_scan(
-        emb.filter(F.col("vec_id") >= N_QUERIES),
-        want_ivf=True,
-        keep_e=True,
-    ).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("cv"),
-        "cell",
+    c = _ref_scan(_candidates(emb), want_ivf=True, keep_e=True).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv"), "cell"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        F.broadcast(q)
-        .join(c, "cell")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-        .select(
-            "query_id", "neighbor_id", F.row_number().over(w).alias("nn_rank")
-        )
-        .filter(F.col("nn_rank") <= TOP_K)
-    )
+    return _cosine_top_k(F.broadcast(q).join(c, "cell"))
 
 
 PQ_REF_M = 8  # subspaces
@@ -1909,55 +1750,21 @@ def x15_pq_reference_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at ~1.05 s per 2,000-row encode pass), and the ADC fold is the
     `_adc_sum` unrolled codegen chain instead of an interpreted
     per-pair F.aggregate."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    emb = _vectors(spark, sf_dir)
+    cand = _ref_scan(_candidates(emb), want_pq=True).select(
+        F.col("vec_id").alias("neighbor_id"), "codes"
     )
-    cand = _ref_scan(
-        emb.filter(F.col("vec_id") >= N_QUERIES), want_pq=True
-    ).select(F.col("vec_id").alias("neighbor_id"), "codes")
-    q = _ref_scan(
-        emb.filter(F.col("vec_id") < N_QUERIES), want_pq=True
-    ).select(F.col("vec_id").alias("query_id"), "lut")
+    q = _ref_scan(_queries(emb), want_pq=True).select(
+        F.col("vec_id").alias("query_id"), "lut"
+    )
     # ADC scan: queries broadcast against the 4-byte code relation only
     scored = (
         F.broadcast(q)
         .crossJoin(cand)
         .select("query_id", "neighbor_id", _adc_sum().alias("adc"))
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        scored.select(
-            "query_id", "neighbor_id", F.row_number().over(ws).alias("sr")
-        )
-        .filter(F.col("sr") <= PQ_REF_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qv")
-    )
-    cv = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv")
-    )
-    sims = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.select(
-            "query_id", "neighbor_id", F.row_number().over(w).alias("nn_rank")
-        )
-        .filter(F.col("nn_rank") <= TOP_K)
-    )
+    short = _top_k(scored, "adc", PQ_REF_SHORTLIST, rank="sr")
+    return _rerank(short, emb, _queries(emb))
 
 
 # --- dq10: embedding drift ----------------------------------------------------
@@ -2115,15 +1922,7 @@ def x16_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     force (broadcast query set, linear scan per query); at 100 TB the
     scan runs inside IVF probe cells (x4/the persisted index) with
     this same filter as the rerank predicate."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qv")
-    )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv")
-    )
+    q, c = _sides(_vectors(spark, sf_dir))
     sim = cosine_sim(F.col("qv"), F.col("cv"))
     return (
         F.broadcast(q)
@@ -2238,6 +2037,40 @@ def hamming_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _signature_frame(load_table(spark, sf_dir, "embeddings"))
 
 
+def _hamming(a: str, b: str) -> Column:
+    """Σ_w popcount(a{w} xor b{w}) over the packed signature words, as
+    bigint."""
+    return sum(
+        F.bit_count(F.col(f"{a}{w}").bitwiseXOR(F.col(f"{b}{w}")))
+        for w in range(X17_WORDS)
+    ).cast("long")
+
+
+def _hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, neighbor_id, hamming) for every (query, candidate)
+    pair: the broadcast query signatures crossed with the candidate
+    signatures — the candidate's float embedding never moves."""
+    sig = hamming_signatures(spark, sf_dir)
+    sig_cols = [f"sig{w}" for w in range(X17_WORDS)]
+    q = _queries(sig).select(
+        F.col("vec_id").alias("query_id"),
+        *[F.col(c).alias(f"q{c}") for c in sig_cols],
+    )
+    c = _candidates(sig).select(
+        F.col("vec_id").alias("neighbor_id"),
+        *[F.col(c).alias(f"c{c}") for c in sig_cols],
+    )
+    return (
+        F.broadcast(q)
+        .crossJoin(c)
+        .select(
+            "query_id",
+            "neighbor_id",
+            _hamming("qsig", "csig").alias("hamming"),
+        )
+    )
+
+
 def _x17_sig_sql() -> str:
     """DuckDB CTEs re-deriving the packed signatures: the md5 ±1
     plane matrix, the quantized dot per (vector, plane) — exact
@@ -2330,41 +2163,7 @@ def x17_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     moves. At 100 TB the signature relation is the persisted index
     (sources/tables.py's IVF pattern) and the crossJoin becomes the
     per-bucket probe scan."""
-    sig = hamming_signatures(spark, sf_dir)
-    sig_cols = [f"sig{w}" for w in range(X17_WORDS)]
-    q = sig.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        *[F.col(c).alias(f"q{c}") for c in sig_cols],
-    )
-    c = sig.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        *[F.col(c).alias(f"c{c}") for c in sig_cols],
-    )
-    ham = sum(
-        F.bit_count(
-            F.col(f"qsig{w}").bitwiseXOR(F.col(f"csig{w}"))
-        )
-        for w in range(X17_WORDS)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    return (
-        F.broadcast(q)
-        .crossJoin(c)
-        .select(
-            "query_id",
-            "neighbor_id",
-            ham.cast("long").alias("hamming"),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            F.row_number().over(w).alias("nn_rank"),
-        )
-        .filter(F.col("nn_rank") <= X17_K)
-    )
+    return _top_k(_hamming_pairs(spark, sf_dir), "hamming", X17_K, asc=True)
 
 
 X18_SHORTLIST = 400  # binary candidates per query before exact rerank
@@ -2431,66 +2230,15 @@ def x18_binary_shortlist_rerank(
     then ranks per query. At 100 TB stage 1 runs over the persisted
     Hamming index's pruned buckets and stage 2's fetch is a
     point-lookup join against the bucketed embedding table."""
-    sig = hamming_signatures(spark, sf_dir)
-    sig_cols = [f"sig{w}" for w in range(X17_WORDS)]
-    q = sig.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        *[F.col(c).alias(f"q{c}") for c in sig_cols],
+    short = _top_k(
+        _hamming_pairs(spark, sf_dir),
+        "hamming",
+        X18_SHORTLIST,
+        rank="hrank",
+        asc=True,
     )
-    c = sig.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        *[F.col(c).alias(f"c{c}") for c in sig_cols],
-    )
-    ham = sum(
-        F.bit_count(F.col(f"qsig{w}").bitwiseXOR(F.col(f"csig{w}")))
-        for w in range(X17_WORDS)
-    )
-    hw = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    short = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .select(
-            "query_id",
-            "neighbor_id",
-            ham.cast("long").alias("hamming"),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.row_number().over(hw).alias("hrank"),
-        )
-        .filter(F.col("hrank") <= X18_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    qe = emb.withColumnRenamed("vec_id", "query_id").withColumnRenamed(
-        "v", "qv"
-    )
-    ce = emb.withColumnRenamed("vec_id", "neighbor_id").withColumnRenamed(
-        "v", "cv"
-    )
-    rw = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        short.join(F.broadcast(qe), "query_id")
-        .join(ce, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.row_number().over(rw).alias("nn_rank"),
-        )
-        .filter(F.col("nn_rank") <= TOP_K)
-    )
+    emb = _vectors(spark, sf_dir)
+    return _rerank(short, emb, _queries(emb))
 
 
 # --- persisted Hamming signature index ---------------------------------------
@@ -2525,17 +2273,7 @@ def build_hamming_index(
     bucket-partitioned; rebuilds are idempotent (overwrite). At 100 TB
     the index is ~0.1% of the float corpus bytes and each probe reads
     only the certified bucket directories."""
-    from etl_project_spark.sources.tables import _drop_table_and_location
-
-    sig = hamming_signatures(spark, sf_dir)
-    _drop_table_and_location(spark, table)
-    (
-        sig.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .format("parquet")
-        .saveAsTable(table)
-    )
+    _write_index(spark, hamming_signatures(spark, sf_dir), table, "bucket")
 
 
 def append_to_hamming_index(
@@ -2552,19 +2290,7 @@ def append_to_hamming_index(
     expression would silently corrupt the index's exactness
     certificate). Returns rows appended (Observation on the write
     job)."""
-    from pyspark.sql import Observation
-
-    rows = _signature_frame(new_vectors)
-    obs = Observation()
-    (
-        rows.observe(obs, F.count(F.lit(1)).alias("n"))
-        .repartition("bucket")
-        .write.mode("append")
-        .partitionBy("bucket")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    return int(obs.get["n"])
+    return _append_index(_signature_frame(new_vectors), table, "bucket")
 
 
 def query_hamming_index(
@@ -2625,26 +2351,18 @@ def query_hamming_index(
             f"query_id long, bucket int, {qs_schema}",
         )
         union = sorted({b for bs in probe_map.values() for b in bs})
-        ham = sum(
-            F.bit_count(
-                F.col(f"qs{w}").bitwiseXOR(F.col(f"sig{w}"))
-            )
-            for w in range(X17_WORDS)
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.asc("hamming"), F.asc("neighbor_id")
-        )
-        return (
+        return _top_k(
             idx.filter(F.col("bucket").isin(union))
             .join(F.broadcast(pairs), "bucket")
             .filter(F.col("vec_id") != F.col("query_id"))
             .select(
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
-                ham.cast("long").alias("hamming"),
-            )
-            .withColumn("nn_rank", F.row_number().over(w))
-            .filter(F.col("nn_rank") <= k)
+                _hamming("qs", "sig").alias("hamming"),
+            ),
+            "hamming",
+            k,
+            asc=True,
         )
 
     dk = {
@@ -2805,23 +2523,15 @@ def x19_ivfpq_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow GEMM kernels; this reference replays the identical stage
     DAG with plan-time codebooks so the driver can hash it.
     Reference parity: extension scope (SURVEY §2h X3)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _vectors(spark, sf_dir)
     # --- IVF assignment + PQ encode + query LUT in ONE Arrow kernel
     # pass per branch (r12: `_ref_scan` — bit-identical numpy dot
     # folds; the r8 HOF expression stage evaluated interpreted at
     # ~1.5 s over the sf0.1 corpus) ---
-    cand = _ref_scan(
-        emb.filter(F.col("vec_id") >= N_QUERIES),
-        want_ivf=True,
-        want_pq=True,
-    ).select(F.col("vec_id").alias("neighbor_id"), "cell", "codes")
-    q = _ref_scan(
-        emb.filter(F.col("vec_id") < N_QUERIES),
-        want_ivf=True,
-        want_pq=True,
-    ).select(
+    cand = _ref_scan(_candidates(emb), want_ivf=True, want_pq=True).select(
+        F.col("vec_id").alias("neighbor_id"), "cell", "codes"
+    )
+    q = _ref_scan(_queries(emb), want_ivf=True, want_pq=True).select(
         F.col("vec_id").alias("query_id"),
         F.explode("probes").alias("cell"),
         "lut",
@@ -2834,40 +2544,8 @@ def x19_ivfpq_serving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cand, "cell")
         .select("query_id", "neighbor_id", _adc_sum().alias("adc"))
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        scored.select(
-            "query_id", "neighbor_id", F.row_number().over(ws).alias("sr")
-        )
-        .filter(F.col("sr") <= X19_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qv")
-    )
-    cv = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv")
-    )
-    sims = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.select(
-            "query_id", "neighbor_id", F.row_number().over(w).alias("nn_rank")
-        )
-        .filter(F.col("nn_rank") <= TOP_K)
-    )
+    short = _top_k(scored, "adc", X19_SHORTLIST, rank="sr")
+    return _rerank(short, emb, _queries(emb))
 
 
 # --- x20: trained IVF + PQ serving (km1 centroids, hash-exact) ---------------
@@ -3025,12 +2703,8 @@ def x20_ivfpq_trained_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_margin_probe_assignments,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    cand_cells = kmeans_assignments(spark, sf_dir).filter(
-        F.col("vec_id") >= N_QUERIES
-    )
+    emb = _vectors(spark, sf_dir)
+    cand_cells = _candidates(kmeans_assignments(spark, sf_dir))
     # probe only the query vectors (the filter sits below the Arrow
     # kernel, so the scan prunes to N_QUERIES rows instead of running
     # the margin kernel over the corpus)
@@ -3039,14 +2713,12 @@ def x20_ivfpq_trained_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         X20_MARGIN_PCT,
         X20_MIN_PROBES,
-        embq=_quantized(spark, sf_dir).filter(
-            F.col("vec_id") < N_QUERIES
-        ),
+        embq=_queries(_quantized(spark, sf_dir)),
     )
     # PQ encode + query LUT via the `_ref_scan` Arrow kernel (r12 —
     # bit-identical numpy dot folds; see x15)
     cand = (
-        _ref_scan(emb.filter(F.col("vec_id") >= N_QUERIES), want_pq=True)
+        _ref_scan(_candidates(emb), want_pq=True)
         .select(F.col("vec_id").alias("neighbor_id"), "codes")
         .join(
             cand_cells.select(
@@ -3057,7 +2729,7 @@ def x20_ivfpq_trained_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     q = (
-        _ref_scan(emb.filter(F.col("vec_id") < N_QUERIES), want_pq=True)
+        _ref_scan(_queries(emb), want_pq=True)
         .select(F.col("vec_id").alias("query_id"), "lut")
         .join(
             q_probes.select(
@@ -3073,42 +2745,10 @@ def x20_ivfpq_trained_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cand, "cell")
         .select("query_id", "neighbor_id", "nprobes", _adc_sum().alias("adc"))
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("neighbor_id")
+    short = _top_k(
+        scored,
+        "adc",
+        F.lit(X20_SHORTLIST_PER_PROBE) * F.col("nprobes"),
+        rank="sr",
     )
-    shortlist = (
-        scored.select(
-            "query_id",
-            "neighbor_id",
-            "nprobes",
-            F.row_number().over(ws).alias("sr"),
-        )
-        .filter(
-            F.col("sr") <= F.lit(X20_SHORTLIST_PER_PROBE) * F.col("nprobes")
-        )
-        .select("query_id", "neighbor_id")
-    )
-    qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("e").alias("qv")
-    )
-    cv = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("cv")
-    )
-    sims = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_sim(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        sims.select(
-            "query_id", "neighbor_id", F.row_number().over(w).alias("nn_rank")
-        )
-        .filter(F.col("nn_rank") <= TOP_K)
-    )
+    return _rerank(short, emb, _queries(emb))

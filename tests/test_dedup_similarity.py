@@ -69,10 +69,12 @@ def test_approx_topk_recall(spark, sf_dir, name):
         (r["query_id"], r["neighbor_id"])
         for r in get("x1_topk_cosine_exact").fn(spark, sf_dir).collect()
     }
-    approx = {
-        (r["query_id"], r["neighbor_id"]) for r in get(name).fn(spark, sf_dir).collect()
-    }
+    got = get(name).fn(spark, sf_dir)
+    approx = {(r["query_id"], r["neighbor_id"]) for r in got.collect()}
     assert approx, "approximate search returned nothing"
+    # the rerank scores with the cosine_sim fold, never a pandas UDF
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan, plan
     recall = len(approx & exact) / len(exact)
     # near-random test embeddings are ANN's hardest case; x3's 32x6
     # config measures ~0.88 here (deterministic planes); IVF with
@@ -606,6 +608,40 @@ def test_x20_trained_ivfpq_matches_python_replay(spark, sf_dir):
         for r in get("x20_ivfpq_trained_serving").fn(spark, sf_dir).collect()
     }
     assert got == expect
+
+
+def test_query_cosine_scores_match_cosine_sim_fold_bit_for_bit(
+    spark, sf_dir
+):
+    """`_query_cosine_scores`, the all-pairs Arrow path of x1 and rk4,
+    must score every (query, candidate) pair BIT-identically to the
+    sequential `cosine_sim` fold, the kernel of every shortlist rerank
+    — the two paths rank the same pairs in the same order."""
+    import etl_project_spark.operators.similarity as S
+    from etl_project_spark.functions.vectors import cosine_sim
+
+    emb = S._vectors(spark, sf_dir)
+    q, c = S._sides(emb)
+    fold = {
+        (r["query_id"], r["neighbor_id"]): r["sim"]
+        for r in F.broadcast(q)
+        .crossJoin(c)
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine_sim(F.col("qv"), F.col("cv")).alias("sim"),
+        )
+        .collect()
+    }
+    arrow = {
+        (r["query_id"], r["neighbor_id"]): r["sim"]
+        for r in S._query_cosine_scores(
+            S._candidates(emb), S._queries(emb)
+        ).collect()
+    }
+    assert len(fold) > 0 and arrow.keys() == fold.keys()
+    # exact float equality, pair by pair
+    assert [p for p in fold if fold[p] != arrow[p]] == []
 
 
 def test_ref_scan_kernel_matches_hof_fold_bit_for_bit(spark, sf_dir):

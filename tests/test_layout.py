@@ -386,6 +386,7 @@ def test_ivfpq_index_prunes_and_recalls(spark, sf_dir):
     from etl_project_spark.operators.similarity import (
         N_QUERIES,
         PQ_M,
+        TOP_K,
         build_ivfpq_index,
         query_ivfpq_index,
     )
@@ -406,9 +407,18 @@ def test_ivfpq_index_prunes_and_recalls(spark, sf_dir):
     )
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [cell" in plan, plan
+    rows = got.collect()
+    # an indexed query is never its own neighbour, and every query
+    # still gets exactly k neighbours
+    assert [r for r in rows if r["neighbor_id"] == r["query_id"]] == []
+    per_query: dict[int, int] = {}
+    for r in rows:
+        per_query[r["query_id"]] = per_query.get(r["query_id"], 0) + 1
+    assert per_query == {qid: TOP_K for qid, _ in queries}, per_query
     got_pairs = {
         (r["query_id"], r["neighbor_id"])
-        for r in got.filter(F.col("neighbor_id") >= N_QUERIES).collect()
+        for r in rows
+        if r["neighbor_id"] >= N_QUERIES
     }
     exact = {
         (r["query_id"], r["neighbor_id"])
