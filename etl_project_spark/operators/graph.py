@@ -31,7 +31,10 @@ k-core peeling unrolls a FIXED GR_KCORE_ROUNDS rounds with a
 graph-derived threshold k = (3|E|) // (2|V|) (pure integer arithmetic
 both engines replay — the a15 adaptive-derivation rule), so both
 engines walk the identical peeling tree with no convergence check in
-the differential form.
+the differential form. Below GR_BCAST_EDGE_CAP edges the peel is one
+numpy kernel over the broadcast edge-key array (two bincounts per
+round, no Spark job while the DataFrame is built); above it, the
+rounds run as leftsemi joins in the JVM.
 """
 
 from __future__ import annotations
@@ -70,18 +73,21 @@ _EDGE_SQL = """basket AS (
 # Edge-relation memo (the km1 _KM_STATE precedent): the co-purchase
 # graph is pure deterministic data shared by every operator in this
 # module — at 100 TB it is a materialized edge TABLE, not something
-# each query rebuilds — so the checkpointed relation is cached per
-# (application, sf_dir, parquet fingerprint). The applicationId key
-# scopes entries to the owning SparkContext (a localCheckpoint dies
-# with its session); the fingerprint invalidates on regenerated
-# fixtures.
-_GR_EDGES: dict[tuple, DataFrame] = {}
+# each query rebuilds — so the checkpointed relation and its row count
+# are cached per (application, sf_dir, parquet fingerprint). The
+# applicationId key scopes entries to the owning SparkContext (a
+# localCheckpoint dies with its session); the fingerprint invalidates
+# on regenerated fixtures.
+_GR_EDGES: dict[tuple, tuple[DataFrame, int]] = {}
 
 
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _copurchase_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int]:
     """Distinct undirected co-purchase edges (a < b), materialized once
-    (eager localCheckpoint) — every operator in this module fans out
-    into multiple consumers of the same edge relation."""
+    (eager localCheckpoint), and their count |E| — every operator in
+    this module fans out into multiple consumers of the same edge
+    relation and sizes its plan by |E| against GR_BCAST_EDGE_CAP."""
     from etl_project_spark.catalog import table_fingerprint
 
     key = (
@@ -104,8 +110,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    _GR_EDGES[key] = edges
-    return edges
+    _GR_EDGES[key] = (edges, edges.count())
+    return _GR_EDGES[key]
 
 
 def _degrees(edges: DataFrame) -> DataFrame:
@@ -389,9 +395,9 @@ def gr1_node_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle counts are orientation-independent, so the two
     enumeration orders are hash-identical while the Spark side keeps
     the skew-proof plan."""
-    edges = _copurchase_edges(spark, sf_dir)
+    edges, n_edges = _copurchase_graph(spark, sf_dir)
     deg = _degrees(edges)
-    tri = _triangle_corners(spark, sf_dir, edges, n_edges=edges.count())
+    tri = _triangle_corners(spark, sf_dir, edges, n_edges=n_edges)
     # per triangle each corner gains exactly 1 (the old per-edge credit
     # fold — (u, c), (v, c), (w, 1) per common neighbor — sums to the
     # same integers: an edge's c is 1 per triangle it bases)
@@ -445,37 +451,45 @@ def _gr2_oracle() -> str:
     """
 
 
-@register("gr2_kcore_layers", oracle=_gr2_oracle())
-def gr2_kcore_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Onion-layer k-core peeling: repeatedly delete nodes with fewer
-    than k surviving neighbors; a node's layer is the round that
-    removed it (survivors after GR_KCORE_ROUNDS rounds get layer
-    ROUNDS+1 — the k-resilient core). The decomposition tiers a graph
-    by embeddedness: layer-1 nodes hang off the periphery, the core is
-    the dense interior that survives any amount of trimming — the
-    standard preprocessing cut for influence analysis and for
-    shrinking a graph before quadratic mining.
+def _kcore_layers(keys: np.ndarray) -> pd.DataFrame:
+    """The fixed-depth k-core peel over a sorted packed edge-key array
+    (a * 2^32 + b, a < b): (pkey, layer) per node, layer = 1 + rounds
+    survived. Nodes map to dense indices by one np.unique; each round
+    is two bincounts over the edges whose endpoints are both alive, so
+    a node with no alive neighbour never survives (max(k, 1) — as in
+    the semi-join form, where survival needs one joined adjacency row).
+    Survivor sets only shrink, so rounds survived = layer - 1."""
+    n_e = len(keys)
+    if n_e == 0:
+        return pd.DataFrame({"pkey": [], "layer": []}, dtype=np.int64)
+    nodes, idx = np.unique(
+        np.concatenate((keys >> 32, keys & (_GR_PACK - 1))),
+        return_inverse=True,
+    )
+    ia, ib = idx[:n_e], idx[n_e:]
+    n_v = len(nodes)
+    k = max((3 * n_e) // (2 * n_v), 1)
+    alive = np.ones(n_v, dtype=bool)
+    layer = np.ones(n_v, dtype=np.int64)
+    for _ in range(GR_KCORE_ROUNDS):
+        live = alive[ia] & alive[ib]
+        ia, ib = ia[live], ib[live]  # a dead edge never revives
+        deg = np.bincount(ia, minlength=n_v) + np.bincount(ib, minlength=n_v)
+        alive &= deg >= k
+        layer += alive
+    return pd.DataFrame({"pkey": nodes, "layer": layer})
 
-    k is GRAPH-DERIVED, not a constant: k = (3|E|) // (2|V|) (3/4 of
-    the average degree, pure integer arithmetic both engines replay —
-    a15's adaptive-derivation rule), so the same operator yields a
-    multi-layer decomposition at every SF (8 populated layers at
-    sf0.01/sf0.1) instead of going degenerate as density shifts. The
-    peel unrolls a FIXED {GR_KCORE_ROUNDS} rounds — no convergence
-    probe — so the unrolled oracle walks the identical tree and the
-    driver hash applies to an ITERATIVE graph algorithm (the an5/km1
-    pattern); converged at every test SF, and a production run swaps
-    the fixed depth for a convergence check.
 
-    Shape: each round is two leftsemi joins of the 2|E|-row adjacency
-    against the surviving set plus one map-side-combined degree count
-    — linear per round, {GR_KCORE_ROUNDS} rounds, every intermediate
+def _kcore_layers_jvm(edges: DataFrame, n_edges: int) -> DataFrame:
+    """The above-cap peel: each round is two leftsemi joins of the
+    2|E|-row adjacency against the surviving set plus one map-side-
+    combined degree count — linear per round, every intermediate
     eagerly checkpointed so lineage stays flat. Round 1 folds into the
     static degree relation (r13 — all nodes alive ⇒ the semi joins are
     no-ops, so the first round is one aggregation instead of two
     broadcast builds + probes; interleaved A/B 3.90 → 3.60 s median at
     sf0.1). The |V|-row survivor relations never leave the cluster;
-    only |E| and |V| (two scalars) are pulled to the driver for k.
+    only |V| is pulled to the driver for k.
 
     r12 micro-wins (guide §2.4): the two per-round semi-join probes
     broadcast CANONICALLY IDENTICAL projections of the checkpointed
@@ -487,7 +501,6 @@ def gr2_kcore_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled plan doubles per round (2^R subtree copies), and at R=8
     the 6.3k-node plan made planning itself the bottleneck (noop sink
     13.8 s vs 3.5 s here)."""
-    edges = _copurchase_edges(spark, sf_dir)
     adj = (
         edges.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .unionAll(
@@ -496,7 +509,6 @@ def gr2_kcore_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     a0 = adj.select("node").distinct().localCheckpoint(eager=True)
-    n_edges = edges.count()
     n_nodes = a0.count()
     k = (3 * n_edges) // (2 * n_nodes)
     # survivor sets are |V|-row; broadcast them into the semi joins
@@ -554,6 +566,53 @@ def gr2_kcore_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("gr2_kcore_layers", oracle=_gr2_oracle())
+def gr2_kcore_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Onion-layer k-core peeling: repeatedly delete nodes with fewer
+    than k surviving neighbors; a node's layer is the round that
+    removed it (survivors after GR_KCORE_ROUNDS rounds get layer
+    ROUNDS+1 — the k-resilient core). The decomposition tiers a graph
+    by embeddedness: layer-1 nodes hang off the periphery, the core is
+    the dense interior that survives any amount of trimming — the
+    standard preprocessing cut for influence analysis and for
+    shrinking a graph before quadratic mining.
+
+    k is GRAPH-DERIVED, not a constant: k = (3|E|) // (2|V|) (3/4 of
+    the average degree, pure integer arithmetic both engines replay —
+    a15's adaptive-derivation rule), so the same operator yields a
+    multi-layer decomposition at every SF (8 populated layers at
+    sf0.01/sf0.1) instead of going degenerate as density shifts. The
+    peel unrolls a FIXED {GR_KCORE_ROUNDS} rounds — no convergence
+    probe — so the unrolled oracle walks the identical tree and the
+    driver hash applies to an ITERATIVE graph algorithm (the an5/km1
+    pattern); converged at every test SF, and a production run swaps
+    the fixed depth for a convergence check.
+
+    Shape: below GR_BCAST_EDGE_CAP edges (gated on the memoized |E|
+    BEFORE the edge keys are collected to the driver) the whole peel
+    is one numpy kernel (_kcore_layers) over the sorted edge-key array
+    gr1/gr4 already broadcast, run lazily as a mapInPandas over a
+    one-row seed: once the edge memos are warm, building the DataFrame
+    runs no Spark job, and the action is one single-task job (the JVM
+    peel runs ~37 jobs and 9 eager checkpoints while building). The
+    graph is |E| int64 keys — 40 MB at the cap — so one task holds it.
+    Above the cap the iterative JVM peel (_kcore_layers_jvm) runs
+    instead; the plan changes with data size, the layers never do."""
+    edges, n_edges = _copurchase_graph(spark, sf_dir)
+    if n_edges > GR_BCAST_EDGE_CAP:
+        return _kcore_layers_jvm(edges, n_edges)
+    bkeys = _edge_key_broadcast(spark, sf_dir, edges)
+
+    def kernel(batches):
+        for _ in batches:
+            pass
+        yield _kcore_layers(bkeys.value)
+
+    return spark.range(0, 1, numPartitions=1).mapInPandas(
+        kernel, "pkey long, layer long"
+    )
+
+
 @register(
     "gr3_graph_profile",
     oracle=f"""
@@ -601,7 +660,7 @@ def gr3_graph_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     composes broadcast crossJoins of
     the three scalar aggregates (the a10 pattern) — nothing
     corpus-sized ever reaches the driver."""
-    edges = _copurchase_edges(spark, sf_dir)
+    edges, n_edges = _copurchase_graph(spark, sf_dir)
     deg = _degrees(edges)
     st = deg.agg(
         F.count(F.lit(1)).alias("v_cnt"),
@@ -617,7 +676,7 @@ def gr3_graph_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full-compute noop gain is marginal (2.77 -> ~2.5 s). gr1/gr4 take
     # the kernel because their count() paths eliminate the triangle
     # branch via the left join either way.
-    tc = _edge_common_outnbrs(edges, n_edges=edges.count()).agg(
+    tc = _edge_common_outnbrs(edges, n_edges=n_edges).agg(
         F.coalesce(F.sum(F.size("common")), F.lit(0))
         .cast("long")
         .alias("n_triangles")
@@ -700,9 +759,9 @@ def gr4_edge_embeddedness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast below the cap); the Jaccard denominator
     (deg_a−1)+(deg_b−1)−n_tri is exact int64 with a guarded zero
     case, the ratio one ROUND(6) division."""
-    edges = _copurchase_edges(spark, sf_dir)
+    edges, n_edges = _copurchase_graph(spark, sf_dir)
     deg = _degrees(edges)
-    tri = _triangle_corners(spark, sf_dir, edges, n_edges=edges.count())
+    tri = _triangle_corners(spark, sf_dir, edges, n_edges=n_edges)
     pair = lambda x, y: F.struct(  # noqa: E731
         F.least(x, y).alias("a"), F.greatest(x, y).alias("b")
     )

@@ -1,8 +1,9 @@
-"""Graph-analytics operators (gr1/gr2/gr3): independent pure-Python
+"""Graph-analytics operators (gr1/gr2/gr3/gr4): independent pure-Python
 recomputation at sf0.001 (no shared code with the operators — edges
 from a direct DuckDB basket join, triangles by brute-force adjacency
-intersection, k-core by literal peeling), plus plan-shape pins for the
-degree-oriented triangle join."""
+intersection, k-core by literal peeling), plan-shape pins for the
+degree-oriented triangle join, and gr2's kernel pins: the numpy peel
+equals the above-cap JVM peel and builds without running a job."""
 
 from __future__ import annotations
 
@@ -86,6 +87,42 @@ def test_gr2_matches_literal_peeling(spark, sf_dir, pygraph):
         for r in all_queries()["gr2_kcore_layers"](spark, sf_dir).collect()
     }
     assert got == expect
+
+
+def test_gr2_kernel_matches_jvm_peel(spark, sf_dir, monkeypatch):
+    """Below GR_BCAST_EDGE_CAP gr2 peels in one numpy kernel; with the
+    cap forced to 0 the iterative JVM peel (the above-cap path, which
+    nothing else in the suite reaches) runs on the same graph and must
+    give the same (pkey, layer) rows."""
+    from etl_project_spark.operators import graph
+
+    fn = all_queries()["gr2_kcore_layers"]
+    kernel_rows = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    monkeypatch.setattr(graph, "GR_BCAST_EDGE_CAP", 0)
+    jvm = fn(spark, sf_dir)
+    plan = jvm._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    assert len({layer for _, layer in kernel_rows}) > 1
+    assert sorted(map(tuple, jvm.collect())) == kernel_rows
+
+
+def test_gr2_build_runs_no_job(spark, sf_dir):
+    """Once the edge memos are warm, building gr2 runs no Spark job:
+    the peel is a lazy mapInPandas over a one-row seed, so all of its
+    work lands in the action."""
+    fn = all_queries()["gr2_kcore_layers"]
+    fn(spark, sf_dir)  # fills the edge relation, |E| and edge-key memos
+    sc = spark.sparkContext
+    group = "test_graph:gr2_kcore_layers:build"
+    sc.setJobGroup(group, "build")
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
 
 
 def test_gr3_profile_matches_closed_form(spark, sf_dir, pygraph):

@@ -36,13 +36,12 @@ def test_triangle_kernel_matches_jvm_intersect_path(spark):
     the IDENTICAL triangle multiset — each triangle once, at its
     packed-minimum corner."""
     from etl_project_spark.operators.graph import (
-        _copurchase_edges,
+        _copurchase_graph,
         _edge_common_outnbrs,
         _triangle_corners,
     )
 
-    edges = _copurchase_edges(spark, SF_DIR)
-    n = edges.count()
+    edges, n = _copurchase_graph(spark, SF_DIR)
     kernel = _triangle_corners(spark, SF_DIR, edges, n_edges=n)
     jvm = _edge_common_outnbrs(edges, n_edges=n).select(
         "u", "v", F.explode("common").alias("w")
@@ -62,11 +61,11 @@ def test_triangle_kernel_chunking_is_row_complete(spark):
 
     from etl_project_spark.operators.graph import (
         _GR_PACK,
-        _copurchase_edges,
+        _copurchase_graph,
         _oriented,
     )
 
-    edges = _copurchase_edges(spark, SF_DIR)
+    edges, _ = _copurchase_graph(spark, SF_DIR)
     adj = (
         _oriented(edges)
         .groupBy("src")

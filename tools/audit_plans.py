@@ -130,7 +130,11 @@ GLOBAL_WINDOW_SITES = (
     "KS_STEP) |\n"
     "| operators/sketches.py `a15_mrl_quantile_sketch` (r13) | a15 | "
     "summary price-bucket totals | ~26 rows (bounded summary ≤33k "
-    "rows bucketed by the same SF-invariant range) |\n"
+    "rows bucketed by the same SF-invariant range); this window runs "
+    "in a job while the DataFrame is built (the estimate collect), so "
+    "the returned plan and this audit never see it — "
+    "tests/test_sketches.py checks its ranks against a Python replay "
+    "of the fold |\n"
     "| ingest/corpus.py `clean_corpus`, `_with_epoch_positions`; "
     "ingest/media_corpus.py `_pack_by_bytes` | fixture ingest only "
     "(not query paths) | bucket totals | same bucket spine |\n"

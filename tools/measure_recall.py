@@ -388,8 +388,8 @@ def main() -> None:
     # operators, not just the ANN trio (VERDICT r6 #7).
     planted = make_planted_fixture(".planted_fixture")
     out["planted_n4000_k25"] = measure_dir(spark, planted)
-    with open("RECALL.json", "w") as f:
-        json.dump(out, f, indent=1)
+    with open("RECALL.json", "w", encoding="utf-8") as f:
+        json.dump(out, f, indent=1, ensure_ascii=False)
     print(json.dumps(out))
     spark.stop()
 
