@@ -48,10 +48,13 @@ def clean_corpus(
     exact column logic of its differentially-checked operator.
 
     With ``near_dup_threshold`` set, near-duplicate clusters (MinHash-
-    LSH verified pairs at that Jaccard threshold → large-star/small-star
-    components, the dd4/dd7 path) are also collapsed to their minimum
-    doc_id BEFORE the gates — the full-strength production dedup on top
-    of the exact-fingerprint pass.
+    LSH verified pairs at that Jaccard threshold → connected components,
+    the dd4/dd7 path) are also collapsed to their minimum doc_id BEFORE
+    the gates — the full-strength production dedup on top of the
+    exact-fingerprint pass. The verified pairs are materialized once
+    and counted, so below graph.GR_BCAST_EDGE_CAP edges the components
+    are one single-task numpy kernel; above it the large-star/small-
+    star rounds run.
 
     With ``dsir_target`` set, every surviving row carries
     ``dsir_logratio`` — pp7's importance weight of that source domain
@@ -92,6 +95,9 @@ def clean_corpus(
             lsh_verified_pairs,
         )
 
+        # eager localCheckpoint, not persist: the ContextCleaner frees
+        # the blocks once the result is unreferenced, where a persist
+        # would pin a CacheManager entry for the session
         edges = (
             lsh_verified_pairs(
                 spark,
@@ -99,11 +105,11 @@ def clean_corpus(
                 threshold=near_dup_threshold,
             )
             .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        losers = connected_components(edges).filter(
-            F.col("node") != F.col("component")
-        )
+        losers = connected_components(
+            edges, n_edges=edges.count()
+        ).filter(F.col("node") != F.col("component"))
         survivors = survivors.join(
             losers.select(F.col("node").alias("doc_id")),
             "doc_id",

@@ -129,12 +129,20 @@ def _shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # its bench number keeps measuring the LSH computation itself, exactly
 # like a real pipeline where one edge-building job feeds many
 # consumers. At 100 TB this is the persisted pair table every dedup
-# stage reads.
-_LSH_PAIRS_MEMO: dict[tuple, DataFrame] = {}
+# stage reads. The relation's row count |E| is memoized with it (the
+# _GR_EDGES precedent): it gates connected_components' in-memory
+# kernel without a count job per build. A new documents fingerprint
+# for an sf_dir evicts the entry it supersedes, so a regenerated
+# fixture leaves no stale checkpoint referenced.
+_LSH_PAIRS_MEMO: dict[tuple, tuple[DataFrame, int]] = {}
 _LSH_PAIRS_APP_ID: str | None = None
 
 
-def _lsh_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _lsh_pairs_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int]:
+    """The memoized verified pair relation (doc_a, doc_b, jaccard),
+    materialized once (eager localCheckpoint), and its count |E|."""
     global _LSH_PAIRS_APP_ID
     from etl_project_spark.catalog import table_fingerprint
 
@@ -148,8 +156,24 @@ def _lsh_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         return got
     raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = lsh_verified_pairs(spark, raw).localCheckpoint()
-    _LSH_PAIRS_MEMO[key] = pairs
-    return pairs
+    for stale in [k for k in _LSH_PAIRS_MEMO if k[0] == sf_dir]:
+        del _LSH_PAIRS_MEMO[stale]
+    _LSH_PAIRS_MEMO[key] = (pairs, pairs.count())
+    return _LSH_PAIRS_MEMO[key]
+
+
+def _lsh_pairs_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _lsh_pairs_graph(spark, sf_dir)[0]
+
+
+def _lsh_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """dd7's (node, component) labels over the memoized pair relation:
+    every doc with a verified near-dup is labelled with its cluster's
+    minimum doc_id; singletons are absent (callers coalesce to
+    doc_id)."""
+    pairs, n_edges = _lsh_pairs_graph(spark, sf_dir)
+    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    return connected_components(edges, n_edges=n_edges)
 
 
 @register(
@@ -973,32 +997,108 @@ def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     ).dropDuplicates()
 
 
+def _cc_labels(
+    u: np.ndarray, v: np.ndarray, max_rounds: int | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Root-hooking connected components over the edge arrays (u, v):
+    returns (node, component) for every endpoint, component = the
+    minimum node id of its component.
+
+    Nodes map to dense indices in id order, so a component's minimum
+    id is its minimum index. Each round hooks, for every edge whose
+    endpoint roots differ, the larger root onto the smaller
+    (np.minimum.at keeps the smallest offer per root), pointer-jumps
+    parent = parent[parent] until every node points at its root, and
+    drops the edges now inside one root. parent[i] <= i holds
+    throughout, so the forest has no cycles and a component's minimum
+    index is never hooked: it ends as the component's one root."""
+    nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u) :]
+    parent = np.arange(len(nodes))
+    rounds = 0
+    while True:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb
+        if not live.any():
+            return nodes, nodes[parent]
+        rounds += 1
+        if max_rounds is not None and rounds > max_rounds:
+            raise RuntimeError(
+                f"connected_components: no fixpoint after {max_rounds} rounds"
+            )
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
 def connected_components(
-    edges: DataFrame, max_rounds: int | None = None
+    edges: DataFrame,
+    max_rounds: int | None = None,
+    n_edges: int | None = None,
 ) -> DataFrame:
-    """Distributed connected components over an undirected edge list
-    (u, v) → (node, component) with component = min node id reachable.
+    """Connected components over an undirected edge list (u, v) →
+    (node, component) with component = min node id reachable. Nodes
+    that appear in no edge are absent.
 
-    Large-star/small-star alternation until the edge set reaches its
-    fixpoint (a star per component: every node points at the component
-    minimum). One driver-side (count, checksum) action per round —
-    O(log n) rounds total, vs O(diameter) for naive label propagation.
+    Two physical paths, chosen by ``n_edges`` (the caller's known
+    |E|) against graph.GR_BCAST_EDGE_CAP:
 
-    ``max_rounds`` is a convergence guard: raise instead of looping
-    forever if the fixpoint isn't reached (a bug or an adversarial
-    graph would otherwise burn the cluster silently); the 10M-row scale
-    smoke pins the observed round count under it on a diameter-2^17
-    chain, the shape that makes naive propagation unusable.
+    - ``n_edges`` given and at most the cap: one lazy mapInPandas over
+      ``edges.coalesce(1)`` runs _cc_labels in a single task. Building
+      the DataFrame runs no Spark job; the action is one single-task
+      job. |E| int64 pairs (80 MB at the cap) fit in one task. The
+      kernel hooks ROOTS, not labels: min-label propagation with
+      shortcutting needs O(diameter) rounds on a chain. On a
+      2^17-node chain with shuffled ids (4-vCPU VM) two min-label
+      variants took 22,676 rounds (47 s) and 56,396 rounds (148 s);
+      root hooking took 11 rounds (0.05 s).
+    - otherwise (no count given, or above the cap): distributed
+      large-star/small-star alternation until the edge set reaches its
+      fixpoint (a star per component: every node points at the
+      component minimum). One driver-side (count, checksum) action per
+      round — O(log n) rounds total, vs O(diameter) for naive label
+      propagation.
 
-    Each round ends in ``localCheckpoint``, not ``persist``: large-star
-    references the round's input TWICE (edges ∪ reversed edges), so the
-    logical plan doubles per round — persist caches *data* but keeps
-    the full lineage, and after ~15 rounds the exponential plan tree
-    OOMs the driver just rendering plan strings (caught by the chain
-    scale smoke). Checkpointing truncates the plan to a leaf each
-    round. On a cluster with executor churn, swap in reliable
-    ``checkpoint()`` + ``setCheckpointDir`` — same contract.
+    ``max_rounds`` is a convergence guard on either path: raise
+    instead of looping forever if the fixpoint isn't reached (a bug or
+    an adversarial graph would otherwise burn the cluster silently);
+    the 10M-row scale smoke pins the star path's round count under it
+    on a diameter-2^17 chain, the shape that makes naive propagation
+    unusable.
+
+    Each star round ends in ``localCheckpoint``, not ``persist``:
+    large-star references the round's input TWICE (edges ∪ reversed
+    edges), so the logical plan doubles per round — persist caches
+    *data* but keeps the full lineage, and after ~15 rounds the
+    exponential plan tree OOMs the driver just rendering plan strings
+    (caught by the chain scale smoke). Checkpointing truncates the
+    plan to a leaf each round. On a cluster with executor churn, swap
+    in reliable ``checkpoint()`` + ``setCheckpointDir`` — same
+    contract.
     """
+    from etl_project_spark.operators import graph
+
+    if n_edges is not None and n_edges <= graph.GR_BCAST_EDGE_CAP:
+
+        def kernel(batches):
+            cols = [(p["u"].to_numpy(), p["v"].to_numpy()) for p in batches]
+            if cols:
+                node, comp = _cc_labels(
+                    np.concatenate([c[0] for c in cols]),
+                    np.concatenate([c[1] for c in cols]),
+                    max_rounds,
+                )
+                yield pd.DataFrame({"node": node, "component": comp})
+
+        return (
+            edges.select("u", "v")
+            .coalesce(1)
+            .mapInPandas(kernel, "node long, component long")
+        )
     prev_sig, rounds = None, 0
     while True:
         rounds += 1
@@ -1065,9 +1165,16 @@ def dd7_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution at scale, over the WHOLE corpus (no
     bounded slice): near-dup edges from the MinHash-LSH candidate path
     (lsh_verified_pairs — never a quadratic all-pairs join) →
-    large-star/small-star connected components → every doc labeled with
-    its cluster's minimum doc_id (the canonical survivor a dedup
-    pipeline keeps). Singletons are their own cluster.
+    connected components → every doc labeled with its cluster's
+    minimum doc_id (the canonical survivor a dedup pipeline keeps).
+    Singletons are their own cluster.
+
+    Shape: the components come from the memoized pair relation and its
+    memoized |E| (_lsh_components). Below graph.GR_BCAST_EDGE_CAP edges
+    they are one lazy single-task mapInPandas (connected_components'
+    root-hooking kernel), so once the memo is warm, building dd7 runs
+    no Spark job; above the cap the large-star/small-star rounds run
+    while the DataFrame is built.
 
     The oracle is the exact transitive closure over the same shingle-
     Jaccard ≥ 0.5 edge relation. LSH recall at the 0.5 boundary is ≈0.87
@@ -1076,13 +1183,7 @@ def dd7_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set recovers every edge, and cluster labels — which only
     need connectivity, not every edge — agree exactly."""
     raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # the shared materialized pair relation: the first star round
-    # references the edge list twice (u→v and its reversal), which the
-    # memo's checkpoint serves without re-running the LSH verify join
-    edges = _lsh_pairs_memo(spark, sf_dir).select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    )
-    comp = connected_components(edges)
+    comp = _lsh_components(spark, sf_dir)
     return (
         raw.select("doc_id")
         .join(comp, raw.doc_id == comp.node, "left")
@@ -1124,7 +1225,9 @@ def dd9_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawled page). Output is one row per non-singleton cluster: the
     kept doc, member count, and the byte mass the collapse removes.
 
-    Shape: dd7's LSH → connected-components labels (never all-pairs)
+    Shape: dd7's LSH → connected-components labels (never all-pairs;
+    below the edge cap one single-task root-hooking kernel over the
+    memoized pairs, above it the large-star/small-star rounds)
     joined to the doc metadata, then ONE per-cluster aggregate —
     max_by(struct(n_chars, -doc_id)) picks the representative inside
     the same hash aggregate that counts members, so there is no rank
@@ -1138,10 +1241,7 @@ def dd9_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars"
     )
-    edges = _lsh_pairs_memo(spark, sf_dir).select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    )
-    comp = connected_components(edges)
+    comp = _lsh_components(spark, sf_dir)
     labeled = (
         raw.select("doc_id", "n_chars")
         .join(comp, raw.doc_id == comp.node, "left")
@@ -1309,7 +1409,8 @@ def dq5_neardup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: exact-dup removability from one groupBy(text) keep-min
     relation joined back (at 100 TB both sides key on xxhash64(text),
     never raw text — dd1's note); near-dup removability from dd7's
-    LSH→CC labels (bounded edge relation, O(log n) star rounds); one
+    LSH→CC labels (bounded edge relation; one in-memory kernel pass
+    below the edge cap, O(log n) star rounds above it); one
     per-source aggregate ends the plan, O(#sources) rows out. The
     corpus is scanned once for text hashing and once inside the LSH
     path; both are full-scan-then-shrink, no quadratic stage."""
@@ -1322,10 +1423,7 @@ def dq5_neardup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         (F.col("doc_id") != F.col("keep_id")).cast("int").alias("ex_rm"),
     )
-    edges = _lsh_pairs_memo(spark, sf_dir).select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    )
-    comp = connected_components(edges)
+    comp = _lsh_components(spark, sf_dir)
     nd = (
         docs.select("doc_id")
         .join(comp, F.col("doc_id") == F.col("node"), "left")
@@ -1532,24 +1630,23 @@ def smp7_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, which tests/test_dedup_similarity.py pins (no LSH
     edge straddles splits).
 
-    Shape: dd7's plan (LSH candidates -> verified edges -> O(log n)
-    star-contraction components; never all-pairs) plus one scan-local
-    md5 projection — the split adds NO shuffle beyond the cluster
-    labeling it already needs. Same 90/5/5 hex thresholds as smp3, so
-    the two relations are drop-in interchangeable downstream; split
-    membership stays decidable per (doc, cluster) row with no global
-    state, and appending new docs never moves an existing family
-    (frozen-merges discipline, the append_to_text_index rule)."""
+    Shape: dd7's plan (LSH candidates -> verified edges -> connected
+    components, one in-memory kernel pass below the edge cap and
+    O(log n) star-contraction rounds above it; never all-pairs) plus
+    one scan-local md5 projection — the split adds NO shuffle beyond
+    the cluster labeling it already needs. Same 90/5/5 hex thresholds
+    as smp3, so the two relations are drop-in interchangeable
+    downstream; split membership stays decidable per (doc, cluster)
+    row with no global state, and appending new docs never moves an
+    existing family (frozen-merges discipline, the
+    append_to_text_index rule)."""
     from etl_project_spark.operators.core import (
         _SPLIT_TRAIN_MAX,
         _SPLIT_VAL_MAX,
     )
 
     raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    edges = _lsh_pairs_memo(spark, sf_dir).select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    )
-    comp = connected_components(edges)
+    comp = _lsh_components(spark, sf_dir)
     labeled = (
         raw.select("doc_id")
         .join(comp, raw.doc_id == comp.node, "left")
@@ -1667,7 +1764,7 @@ def dq8_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _lsh_pairs_memo(spark, sf_dir).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    comp = connected_components(edges)
+    comp = _lsh_components(spark, sf_dir)
     labeled = (
         raw.select("doc_id")
         .join(comp, raw.doc_id == comp.node, "left")
@@ -1781,10 +1878,7 @@ def pp11_dup_weighted_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the same aggregate: canonical == cluster label by
     construction, so no second join back). O(canonical docs) out."""
     raw = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    edges = _lsh_pairs_memo(spark, sf_dir).select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    )
-    comp = connected_components(edges)
+    comp = _lsh_components(spark, sf_dir)
     m = (
         raw.select("doc_id", F.size(_tokens()).alias("n_tokens"))
         .join(comp, F.col("doc_id") == F.col("node"), "left")

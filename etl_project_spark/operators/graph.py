@@ -2,10 +2,11 @@
 k-core decomposition, and a whole-graph profile.
 
 The engine already walks graphs iteratively (an5's PageRank power
-iterations, dd7's large-star/small-star connected components); this
-module adds the STRUCTURAL mining family a feature platform runs over
-an item-affinity graph: per-node triangle support (the basis of
-cohesion features and spam/bot detection), onion-layer k-core
+iterations; dd7's connected components, one root-hooking numpy pass
+below GR_BCAST_EDGE_CAP edges and large-star/small-star rounds above
+it); this module adds the STRUCTURAL mining family a feature platform
+runs over an item-affinity graph: per-node triangle support (the basis
+of cohesion features and spam/bot detection), onion-layer k-core
 decomposition (influence tiers / graph trimming), and the one-row
 density profile (transitivity — the global clustering coefficient).
 Extension scope (SURVEY §2h): the reference's analytics end at
@@ -53,6 +54,8 @@ GR_KCORE_ROUNDS = 8  # fixed peeling depth (converges at every test SF)
 # comfortably in an executor (~8 bytes per edge endpoint -> ~40 MB at
 # the cap); beyond it the joins fall back to shuffled equi-joins on
 # the node key — the plan changes with data size, results never do.
+# dedup.connected_components gates its single-task kernel on the same
+# cap.
 GR_BCAST_EDGE_CAP = 5_000_000
 
 # packed (degree, id) orientation key: deg < 2^31 and partkey < 2^31,

@@ -1942,16 +1942,10 @@ def pp15_dedup_weighted_mixture(
     bit-identical across engines; dup_inflation is NULL-guarded in both
     engines for a source with no canonical docs (lm7's degenerate-fit
     rule)."""
-    from etl_project_spark.operators.dedup import (
-        _lsh_pairs_memo,
-        connected_components,
-    )
+    from etl_project_spark.operators.dedup import _lsh_components
 
     docs = load_table(spark, sf_dir, "documents")
-    edges = _lsh_pairs_memo(spark, sf_dir).select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    )
-    comp = connected_components(edges)
+    comp = _lsh_components(spark, sf_dir)
     m = (
         docs.select("doc_id", "source", F.size(_tokens()).alias("n_toks"))
         .join(comp, docs.doc_id == comp.node, "left")

@@ -108,6 +108,24 @@ def test_clean_corpus_near_dup_collapse(spark, sf_dir):
     assert losers, "corpus should contain at least one near-dup cluster"
 
 
+def test_clean_corpus_near_dup_pins_no_cache_entry(spark, sf_dir):
+    """clean_corpus(near_dup_threshold=...) materializes its edge
+    relation with an eager localCheckpoint, which the ContextCleaner
+    frees once unreferenced: the call leaves no new CacheManager entry
+    for the session. The threshold is one no other test uses, so no
+    earlier call can have registered the same plan."""
+    from etl_project_spark.catalog import load_table
+    from etl_project_spark.ingest.corpus import clean_corpus
+    from etl_project_spark.operators.dedup import lsh_verified_pairs
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    lsh_verified_pairs(spark, docs)  # registers the shared band signatures
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    assert clean_corpus(spark, sf_dir, near_dup_threshold=0.75).count() > 0
+    assert cache.numCachedEntries() == before
+
+
 def test_clean_corpus_dsir_and_positions(spark, sf_dir):
     """With dsir_target + epoch set: every survivor carries a finite
     dsir_logratio equal to pp7's standalone score, and position is a

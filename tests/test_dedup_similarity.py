@@ -109,10 +109,10 @@ def test_vector_functions_match_numpy(spark):
     assert row["dist"] == pytest.approx(float(np.linalg.norm(na - nb)))
 
 
-def test_connected_components_chain_and_random(spark):
-    """large-star/small-star CC must label every node with its component
-    min — including a 60-node chain, the O(diameter) worst case that a
-    naive label-propagation loop crawls on."""
+def _chain_and_random_edges():
+    """A 60-node chain (one component, min 0) plus a path over the
+    shuffled ids 100..159 (one component, min 100), and that path's
+    first node."""
     import random
 
     chain = [(i, i + 1) for i in range(60)]  # one long path, min = 0
@@ -124,6 +124,14 @@ def test_connected_components_chain_and_random(spark):
         for a, b in zip(nodes, nodes[1:])
         if a != b
     ]
+    return chain, blob, nodes[0]
+
+
+def test_connected_components_chain_and_random(spark):
+    """large-star/small-star CC must label every node with its component
+    min — including a 60-node chain, the O(diameter) worst case that a
+    naive label-propagation loop crawls on."""
+    chain, blob, first = _chain_and_random_edges()
     edges = spark.createDataFrame(chain + blob, "u long, v long")
     got = {
         r["node"]: r["component"]
@@ -143,7 +151,109 @@ def test_connected_components_chain_and_random(spark):
             parent[max(ru, rv)] = min(ru, rv)
     want = {n: find(n) for n in parent}
     assert got == want
-    assert got[60] == 0 and got[nodes[0]] == 100
+    assert got[60] == 0 and got[first] == 100
+
+
+def test_connected_components_kernel_matches_star_rounds(spark):
+    """Given |E| at most the edge cap, connected_components labels in
+    one single-task numpy kernel; its rows equal the star rounds' on
+    the same graph."""
+    chain, blob, _ = _chain_and_random_edges()
+    edges = spark.createDataFrame(chain + blob, "u long, v long")
+    kernel = dedup.connected_components(edges, n_edges=len(chain + blob))
+    plan = kernel._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    assert sorted(map(tuple, kernel.collect())) == sorted(
+        map(tuple, dedup.connected_components(edges).collect())
+    )
+
+
+def test_cc_kernel_labels_shuffled_chain_within_round_guard():
+    """Root hooking on a 2^17-node chain with shuffled ids (naive
+    min-label propagation needs tens of thousands of rounds on it)
+    labels every node with the chain's minimum inside the 24-round
+    guard the star path's scale smoke uses; disjoint 10-node chains
+    keep their own minima. The guard still raises when too small."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    n = 1 << 17
+    ids = rng.permutation(n).astype(np.int64) * 3 + 5
+    blocks = np.arange(10_000_000, 10_001_000, dtype=np.int64)
+    links = blocks[(blocks % 10) != 9]
+    u = np.concatenate([ids[:-1], links])
+    v = np.concatenate([ids[1:], links + 1])
+    order = rng.permutation(len(u))
+    node, comp = dedup._cc_labels(u[order], v[order], max_rounds=24)
+    in_chain = node < 10_000_000
+    assert in_chain.sum() == n and (comp[in_chain] == 5).all()
+    assert (comp[~in_chain] == node[~in_chain] // 10 * 10).all()
+    assert len(node) == n + len(blocks)
+    with pytest.raises(RuntimeError, match="no fixpoint after 1 rounds"):
+        dedup._cc_labels(u, v, max_rounds=1)
+
+
+@pytest.mark.parametrize("name", ["dd7_dup_clusters", "dd9_canonical_keep"])
+def test_lsh_components_star_path_matches_kernel(
+    spark, sf_dir, name, monkeypatch
+):
+    """Below graph.GR_BCAST_EDGE_CAP the near-dup clusters come from
+    the numpy kernel; with the cap forced to 0 the large-star/small-
+    star rounds (the above-cap path) run on the same memoized pairs
+    and must give the same rows."""
+    from etl_project_spark.operators import graph
+
+    fn = get(name).fn
+    kernel = fn(spark, sf_dir)
+    assert "MapInPandas" in kernel._jdf.queryExecution().executedPlan().toString()
+    kernel_rows = sorted(map(tuple, kernel.collect()))
+    monkeypatch.setattr(graph, "GR_BCAST_EDGE_CAP", 0)
+    star = fn(spark, sf_dir)
+    assert "MapInPandas" not in star._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, star.collect())) == kernel_rows
+
+
+def test_dd7_build_runs_no_job(spark, sf_dir):
+    """Once the pair memo is warm, building dd7 runs no Spark job: the
+    components are a lazy mapInPandas over the memoized pairs, so all
+    of the work lands in the action."""
+    fn = get("dd7_dup_clusters").fn
+    fn(spark, sf_dir)  # fills the pair relation and |E| memo
+    sc = spark.sparkContext
+    group = "test_dedup:dd7_dup_clusters:build"
+    sc.setJobGroup(group, "build")
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+
+
+def test_lsh_pairs_memo_evicts_superseded_fingerprint(spark, sf_dir, tmp_path):
+    """A new documents fingerprint under the same sf_dir replaces the
+    memoized pair relation and its |E| instead of keeping the old
+    checkpoint referenced. Runs on a copy of the fixture table: the
+    committed fixtures are never rewritten."""
+    import os
+    import shutil
+
+    sf = str(tmp_path)
+    shutil.copy(f"{sf_dir}/documents.parquet", f"{sf}/documents.parquet")
+    old = dedup._lsh_pairs_graph(spark, sf)
+    assert dedup._lsh_pairs_graph(spark, sf) is old
+    os.utime(f"{sf}/documents.parquet", ns=(0, 0))  # a regenerated table
+    new = dedup._lsh_pairs_graph(spark, sf)
+    assert new is not old
+    mine = [k for k in dedup._LSH_PAIRS_MEMO if k[0] == sf]
+    assert len(mine) == 1
+    want = sorted(map(tuple, dedup._lsh_pairs_memo(spark, sf_dir).collect()))
+    pairs, n_edges = new
+    assert sorted(map(tuple, pairs.collect())) == want
+    assert n_edges == len(want) > 0
+    del dedup._LSH_PAIRS_MEMO[mine[0]]
 
 
 def test_simhash_multiprobe_exact_and_recall(spark, sf_dir):
