@@ -38,7 +38,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_project_spark.session import prepare
-from etl_project_spark.sources.rest import OhlcvRestSource, normalize_bars
+from etl_project_spark.sources.rest import (
+    BRONZE_SCHEMA,
+    OhlcvRestSource,
+    normalize_bars,
+)
 
 PARTITION_COLS = ("period_date", "coin")
 
@@ -104,11 +108,20 @@ def _read_days(
     spark: SparkSession, path: str, dates: Iterable[str | dt.date]
 ) -> DataFrame:
     """The rows of the given ``period_date`` partitions, scanned in one
-    wave of ``defaultParallelism`` tasks (see the module docstring)."""
-    days = [F.lit(str(d)).cast("date") for d in dates]
+    wave of ``defaultParallelism`` tasks (see the module docstring).
+
+    Only those day directories are listed (``basePath`` keeps the
+    partition columns), and the declared ``BRONZE_SCHEMA`` means no
+    schema-inference job. Several days are read through one
+    ``period_date={a,b}`` glob, so a day with no directory drops out;
+    raises ``AnalysisException`` when no given day has a directory, a
+    missing store included."""
+    days = sorted({f"period_date={d}" for d in dates})
+    glob = days[0] if len(days) == 1 else "{" + ",".join(days) + "}"
     return (
-        spark.read.parquet(path)
-        .filter(F.col("period_date").isin(*days))
+        spark.read.schema(BRONZE_SCHEMA)
+        .option("basePath", path)
+        .parquet(f"{path.rstrip('/')}/{glob}")
         .coalesce(spark.sparkContext.defaultParallelism)
     )
 
@@ -142,11 +155,12 @@ def export_day(
     an ``Observation`` on the write job; a day with no bronze rows
     writes no partition and leaves the other gold days as they were."""
     prepare(spark)
+    try:
+        day = _read_days(spark, bronze_path, [ds])
+    except AnalysisException:  # no bronze directory for the day
+        return 0
     obs = Observation()
-    day = _read_days(spark, bronze_path, [ds]).observe(
-        obs, F.count(F.lit(1)).alias("n")
-    )
-    _overwrite_partitions(day, gold_path)
+    _overwrite_partitions(day.observe(obs, F.count(F.lit(1)).alias("n")), gold_path)
     return int(obs.get["n"])
 
 
@@ -157,7 +171,10 @@ def compact_day(
     writes ~288 tiny files/coin/day): rewrite the partition at
     target_files per coin via repartition, idempotent overwrite."""
     prepare(spark)
-    day = _read_days(spark, path, [ds])
+    try:
+        day = _read_days(spark, path, [ds])
+    except AnalysisException:  # no directory for the day: nothing to compact
+        return
     _overwrite_partitions(day.repartition(target_files, "coin"), path)
 
 

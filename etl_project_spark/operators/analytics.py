@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from etl_project_spark.catalog import load_table
 from etl_project_spark.registry import register
+from etl_project_spark.session import local_frame
 
 FUNNEL_STEPS = ("signup", "view", "click", "purchase")
 SESSION_GAP_S = 1800  # 30-minute inactivity gap, strict (gap > 1800 splits)
@@ -520,7 +521,8 @@ def an5_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sum("w").over(Window.partitionBy("src"))
         ).alias("p"),
     ).collect()  # one corpus scan total; <=625 rows by construction
-    trans = spark.createDataFrame(
+    trans = local_frame(
+        spark,
         trans_rows, "src string, dst string, p double"
     )
     nodes = (

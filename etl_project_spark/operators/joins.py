@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from etl_project_spark.catalog import load_table
 from etl_project_spark.registry import register
+from etl_project_spark.session import local_frame
 
 
 @register(
@@ -300,7 +301,8 @@ def j9_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the agg is map-side partial. (For large range dims the same shape
     becomes a bucketed interval index — bin the fact by floor(value/step)
     and equi-join the bin — but a handful of bands never needs it.)"""
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [
             ("low", 0.0, 20.0),
             ("mid", 20.0, 60.0),

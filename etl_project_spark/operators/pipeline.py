@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from etl_project_spark.catalog import load_table
 from etl_project_spark.operators.dedup import _shingles, _tokens
 from etl_project_spark.registry import register
+from etl_project_spark.session import local_frame
 
 SHARD_TOKENS = 2048  # token budget per training shard
 PACK_BUCKET = 64  # docs per prefix-sum bucket (two-phase cumsum)
@@ -725,7 +726,8 @@ def bpe1_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics. The round-3 per-round-Spark-aggregation form (git
     history, bpe_merge_rounds pre-r5) remains the fallback if the
     vocab must stay distributed."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         bpe_merge_rounds(spark, sf_dir),
         "merge_round int, left_sym string, right_sym string, pair_count long",
     )

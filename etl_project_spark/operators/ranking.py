@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from etl_project_spark.catalog import load_table
 from etl_project_spark.registry import register
+from etl_project_spark.session import local_frame
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -1125,7 +1126,8 @@ def append_to_text_index(
     ).collect()[0]
     if delta["dn"]:
         old = spark.table(f"{table}_stats").collect()[0]
-        stats = spark.createDataFrame(
+        stats = local_frame(
+            spark,
             [
                 (
                     old["n_docs"] + delta["dn"],

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from etl_project_spark.catalog import load_table
 from etl_project_spark.functions.vectors import cosine_sim
 from etl_project_spark.registry import register
+from etl_project_spark.session import local_frame
 
 N_QUERIES = 10  # vec_id < 10 are the query set in the test corpus
 TOP_K = 5
@@ -166,7 +167,8 @@ def _query_cosine_scores(cand: DataFrame, queries: DataFrame) -> DataFrame:
     qrows = sorted(queries.select("vec_id", "e").collect(), key=lambda r: r[0])
     if not qrows:
         spark = cand.sparkSession
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "query_id long, neighbor_id long, sim double"
         )
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
@@ -778,7 +780,7 @@ def x9_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _candidates(load_table(spark, sf_dir, "embeddings")), books
     )
     short = _adc_shortlist(codes, qids, luts, PQ_SHORTLIST)
-    return _rerank(short, emb, spark.createDataFrame(q_rows, emb.schema))
+    return _rerank(short, emb, local_frame(spark, q_rows, emb.schema))
 
 
 def build_ivfpq_index(
@@ -831,7 +833,8 @@ def query_ivfpq_index(
     short = _adc_shortlist(
         idx, qids, _pq_luts(Q, codebooks), shortlist, probe
     )
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
         "vec_id long, e array<double>",
     )
@@ -898,7 +901,8 @@ def query_ivf_index(
         for i, (qid, _) in enumerate(queries)
         for c in order[i]
     ]
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         qrows, "query_id long, qv array<double>, cell int"
     )
     probed = sorted({c for _, _, c in qrows})
@@ -2342,7 +2346,8 @@ def query_hamming_index(
         qs_schema = ", ".join(
             f"qs{w} long" for w in range(X17_WORDS)
         )
-        pairs = spark.createDataFrame(
+        pairs = local_frame(
+            spark,
             [
                 (qid, int(b), *[int(s) for s in qsig])
                 for qid, qsig in queries

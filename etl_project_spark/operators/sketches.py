@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from etl_project_spark.catalog import load_table
 from etl_project_spark.registry import register
+from etl_project_spark.session import local_frame
 
 # --- shared md5 → uniform 32-bit integer ------------------------------------
 # Spark: conv(hex, 16, 10); DuckDB has no conv(), so the oracle folds the
@@ -740,7 +741,8 @@ def a15_mrl_quantile_sketch(
     )
     fmax_row = F.broadcast(loc.agg(F.count(F.lit(1)).alias("fmax")))
     targets = (
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (p, int(math.ceil(p * n / weight + 0.5)))
                 for p in MRL_QS
@@ -777,7 +779,8 @@ def a15_mrl_quantile_sketch(
             for i, r in enumerate(est_rows)
         ]
     )
-    lits = spark.createDataFrame(
+    lits = local_frame(
+        spark,
         [
             (i, r["p"], r["est_value"], r["est_rank"])
             for i, r in enumerate(est_rows)

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from etl_project_spark.catalog import load_table
 from etl_project_spark.registry import register
+from etl_project_spark.session import local_frame
 
 KS_GROUP_A = "A"  # returned items
 KS_GROUP_B = "R"  # refused/R flag — the reference's other closed flag
@@ -294,7 +295,8 @@ def an13_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = math.floor(s * (at_risk - d) / at_risk + 0.5)
         rows.append((day, at_risk, d, cns, s))
         remaining -= d + cns
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "day long, at_risk long, events long, censored long,"
         " surv_e6 long",
@@ -481,7 +483,7 @@ def dq15_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     for vb, st in totals:
         offsets.append((vb, acc))
         acc += st
-    odf = spark.createDataFrame(offsets or [(0, 0)], "vb long, off long")
+    odf = local_frame(spark, offsets or [(0, 0)], "vb long, off long")
     w = (
         Window.partitionBy("vb")
         .orderBy("v")

@@ -7,13 +7,33 @@ with a UTC session timezone and TIMESTAMP_NTZ columns.
 Scale posture: AQE on (runtime coalescing + skew-join splitting), explicit
 shuffle partitioning sized for the local harness but overridable for a real
 cluster, Arrow enabled for the pandas-UDF paths.
+
+Python workers: ``get_spark`` starts them through
+``etl_project_spark.worker_daemon`` (``spark.python.daemon.module``), which
+is ``pyspark.daemon`` with ``zipimporter.invalidate_caches`` made to skip
+archives that have not changed on disk. Without it every Python-worker
+task re-reads pyspark.zip, the Spark core jar and py4j's directories on
+Python 3.11 (0.13-0.29 s a task); on Python >= 3.12 it is harmless. The
+package root goes on ``spark.executorEnv.PYTHONPATH`` so the daemon module
+imports from any working directory.
+
+Rows held on the driver become a DataFrame through ``local_frame`` (one
+Arrow batch, planned as ``LocalTableScan``), never through
+``createDataFrame(list)``, whose pickled-row RDD needs a Python worker per
+partition.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# the directory holding the ``etl_project_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Session-settable confs every query needs regardless of who built the
 # SparkSession (the driver's verify harness builds its own). Applied by
@@ -82,9 +102,46 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "64m")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
+        # Python workers fork from a daemon that does not re-read unchanged
+        # zip archives on every task (module docstring); the package root
+        # on the workers' path makes it importable from any directory.
+        .config("spark.python.daemon.module", "etl_project_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return prepare(builder.getOrCreate())
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
+) -> DataFrame:
+    """Rows held on the driver as a DataFrame that plans as
+    ``LocalTableScan``: the rows go to the JVM as one Arrow table, so no
+    job, RDD or Python worker is involved, and the relation carries its
+    real size for the optimizer.
+
+    A row is a tuple or a ``Row`` (read by position) or a dict (read by
+    field name: a missing name is null, an extra key is ignored), as
+    ``createDataFrame`` reads them. ``schema`` is a ``StructType`` or a
+    DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.names
+
+    def values(row: Any) -> tuple:
+        if isinstance(row, dict):
+            return tuple(row.get(n) for n in names)
+        return tuple(row)
+
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*map(values, rows))) or [()] * len(names)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

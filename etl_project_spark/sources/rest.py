@@ -1,9 +1,11 @@
 """REST OHLCV source (S1/S2 in SURVEY.md §2a): the reference's CoinAPI
 fetch (GET /v1/ohlcv/{symbol}/latest?period_id=5MIN&limit=1 with
 X-CoinAPI-Key header, /root/reference/dags/airflow_dags.py:28-43)
-re-expressed as (a) a plain driver-side fetch → ``createDataFrame`` with
-an explicit schema, and (b) a Spark 4 Python DataSource so
-``spark.read.format("coinapi")`` works natively.
+re-expressed as (a) a plain driver-side fetch → ``session.local_frame``
+with an explicit schema (the fetched bars reach the JVM as one Arrow
+table and plan as ``LocalTableScan``: no job, no Python worker), and (b)
+a Spark 4 Python DataSource so ``spark.read.format("coinapi")`` works
+natively.
 
 The HTTP layer is injectable (``fetcher``) so tests run hermetically; the
 normalization (ISO8601 → naive-UTC timestamps, derived period_date,
@@ -19,12 +21,16 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DateType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
 )
+
+from etl_project_spark.session import local_frame
 
 DEFAULT_COINS = {  # reference symbols, airflow_dags.py:156-172
     "bitcoin": "BITSTAMP_SPOT_BTC_USD",
@@ -53,6 +59,19 @@ RAW_BAR_SCHEMA = StructType(
 # at use sites would append a duplicate `coin` field per call.
 BAR_WITH_COIN_SCHEMA = StructType(
     [*RAW_BAR_SCHEMA.fields, StructField("coin", StringType())]
+)
+
+# What ``normalize_bars`` makes of a BAR_WITH_COIN_SCHEMA frame, as the
+# partitioned bronze store holds it (data columns, then the partition
+# columns): the schema the bronze readers declare, so a read infers none.
+BRONZE_SCHEMA = StructType(
+    [
+        StructField(f.name, TimestampNTZType())
+        if f.name.startswith("time_")
+        else f
+        for f in RAW_BAR_SCHEMA.fields
+    ]
+    + [StructField("period_date", DateType()), StructField("coin", StringType())]
 )
 
 
@@ -93,8 +112,7 @@ class OhlcvRestSource:
         return rows
 
     def to_df(self, spark: SparkSession, rows: Iterable[dict]) -> DataFrame:
-        raw = spark.createDataFrame(list(rows), BAR_WITH_COIN_SCHEMA)
-        return normalize_bars(raw)
+        return normalize_bars(local_frame(spark, rows, BAR_WITH_COIN_SCHEMA))
 
 
 def normalize_bars(raw: DataFrame) -> DataFrame:

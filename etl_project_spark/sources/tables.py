@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_project_spark.catalog import load_table
-from etl_project_spark.session import prepare
+from etl_project_spark.session import local_frame, prepare
 
 FACT_BUCKET_KEYS = {"orders": "o_orderkey", "lineitem": "l_orderkey"}
 
@@ -342,7 +342,8 @@ def _register_pruning_query() -> None:
             )
 
         st = stats("zkey", "zorder").unionByName(stats("d", "linear_date"))
-        preds = spark.createDataFrame(
+        preds = local_frame(
+            spark,
             LY2_PREDICATES,
             "predicate string, d_lo long, d_hi long, k_lo long, k_hi long",
         )

@@ -186,6 +186,133 @@ def test_ingest_tick_dedupe_over_many_one_bar_files(spark, tmp_path):
     assert keys.count() == keys.distinct().count() == 3 * (n_bars + 1)
 
 
+def _jobs_run(spark, group, fn, *args):
+    """``fn(*args)`` and the ids of the Spark jobs it ran, labelled with
+    ``group`` through ``setJobGroup``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_to_df_plans_local_table_scan(spark):
+    """The fetched bars reach the JVM as one Arrow table: the tick's frame
+    is a LocalTableScan, not an RDD of pickled rows that needs a Python
+    worker per partition."""
+    df = _source().to_df(spark, _source().fetch_latest())
+    df.write.format("noop").mode("overwrite").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert df.count() == 3
+
+
+def test_local_frame_reads_tuples_dicts_and_rows(spark):
+    """Tuples and Rows are read by position, dicts by field name (a missing
+    name is null, an extra key ignored); an empty list keeps the schema."""
+    from pyspark.sql import Row
+
+    from etl_project_spark.session import local_frame
+
+    ddl = "a long, b double, c string, v array<double>"
+    rows = [(1, 2.0, "x", [1.0]), Row(2, 3.0, "y", []), {"b": 4.0, "a": 3, "z": 0}]
+    df = local_frame(spark, rows, ddl)
+    assert [tuple(r) for r in df.collect()] == [
+        (1, 2.0, "x", [1.0]),
+        (2, 3.0, "y", []),
+        (3, 4.0, None, None),
+    ]
+    assert df.schema == spark.createDataFrame([], ddl).schema
+    empty = local_frame(spark, [], ddl)
+    assert empty.count() == 0 and empty.schema == df.schema
+    assert "LocalTableScan" in empty._jdf.queryExecution().executedPlan().toString()
+
+
+def test_tick_runs_one_job_first_and_two_with_a_store(spark, tmp_path):
+    """The bronze schema is declared, so a tick infers none: the first
+    tick (no store, so no dedupe) runs only its write job, and a dedupe
+    tick against an existing store runs the keys' broadcast and the
+    write."""
+    bronze = str(tmp_path / "bronze")
+    n, jobs = _jobs_run(
+        spark, "test:first_tick", ohlcv.ingest_tick, spark, _source(), bronze,
+        "5MIN", 1, True,
+    )
+    assert n == 3 and len(jobs) == 1
+    n, jobs = _jobs_run(
+        spark, "test:dedupe_tick", ohlcv.ingest_tick, spark, _source(), bronze,
+        "5MIN", 1, True,
+    )
+    assert n == 0 and len(jobs) == 2
+
+
+def test_bronze_schema_is_what_the_tick_writes(spark, tmp_path):
+    """The declared bronze schema equals the schema Spark infers from the
+    store a tick wrote, so the constant cannot drift from the writer."""
+    from etl_project_spark.sources.rest import BRONZE_SCHEMA
+
+    bronze = str(tmp_path / "bronze")
+    assert ohlcv.ingest_tick(spark, _source(), bronze) == 3
+    assert spark.read.parquet(bronze).schema == BRONZE_SCHEMA
+
+
+def test_bronze_reads_list_only_the_day(spark, tmp_path, monkeypatch):
+    """A store with many history days: the tick's key scan and
+    ``export_day`` read only the current day's files, and their results
+    are the ones a read of the whole store filtered to the day gives."""
+    import datetime as dt
+    import os
+    from urllib.parse import urlparse
+
+    bronze, gold = str(tmp_path / "b"), str(tmp_path / "g")
+    history = [
+        bar
+        for d in range(40)
+        for bar in ohlcv.fake_bars(
+            start=f"{dt.date(2023, 3, 1) + dt.timedelta(days=d)}T00:00:00.0000000Z",
+            n_bars=2,
+        )
+    ]
+    ohlcv.append_bars(OhlcvRestSource("k").to_df(spark, history), bronze)
+    ohlcv.append_bars(
+        OhlcvRestSource("k").to_df(spark, ohlcv.fake_bars(n_bars=4)), bronze
+    )
+    day = "2023-04-26"
+    day_dir = os.path.join(bronze, f"period_date={day}")
+    assert len([d for d in os.listdir(bronze) if d.startswith("period_date=")]) > 40
+
+    read = ohlcv._read_days
+    seen = []
+
+    def spy(spark_, path, dates):
+        df = read(spark_, path, dates)
+        seen.append(df.inputFiles())
+        return df
+
+    monkeypatch.setattr(ohlcv, "_read_days", spy)
+    assert ohlcv.ingest_tick(spark, _source(), bronze, dedupe=True) == 0
+    assert ohlcv.export_day(spark, bronze, gold, day) == 12
+    assert len(seen) == 2
+    day_files = {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(day_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    for files in seen:
+        assert {urlparse(f).path for f in files} == day_files
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    whole = spark.read.parquet(bronze).filter(F.col("period_date") == F.lit(day))
+    assert rows(spark.read.parquet(gold)) == rows(whole)
+
+
 def test_csv_export_contract(spark, tmp_path):
     """K2: headerless, id first — column order load-bearing (SURVEY.md §1)."""
     path = str(tmp_path / "csv")
