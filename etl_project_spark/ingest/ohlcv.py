@@ -22,10 +22,20 @@ files, ~288 per coin per day. Every bronze day read (the tick's key scan,
 the day's files into one wave of ``defaultParallelism`` tasks: a scan
 split into one task per handful of one-bar files pays per-task overhead
 on every split, and a day is bounded by its cadence, so the packed tasks
-stay small at any store size. ``export_day`` counts its rows on the write
-job itself, so the day is scanned once. ``compact_day`` is the daily
-compaction job; the streaming variant in etl_project_spark.streaming
-buffers in micro-batches instead.
+stay small at any store size. ``_read_days`` lists only the given day
+directories (``basePath`` keeps the partition columns), so a read costs
+one day however old the store is, and it declares ``BRONZE_SCHEMA``
+(sources/rest.py), so no read runs a schema-inference job. ``export_day``
+counts its rows on the write job itself, so the day is scanned once.
+``compact_day`` is the daily compaction job; the streaming variant in
+etl_project_spark.streaming buffers in micro-batches instead.
+
+A tick's fetched bars become a ``LocalTableScan`` (``session.local_frame``),
+so the tick runs no Python worker. A dedupe tick against a day that has a
+directory runs 2 jobs: the broadcast of the day's existing keys and the
+append. A tick whose day has no directory yet (the first tick, or the
+first one past midnight) has nothing to collide with and runs only the
+append.
 """
 
 from __future__ import annotations
@@ -89,14 +99,15 @@ def _drop_already_ingested(
 ) -> DataFrame:
     """Anti-join a (tiny) fetched batch against the bronze keys it could
     collide with. Reads only the batch's own (period_date, coin)
-    partitions; returns ``df`` unchanged when bronze doesn't exist yet.
+    partitions; returns ``df`` unchanged when none of the batch's days
+    has a directory yet (a missing store included).
     The keys need no ``distinct()``: a left-anti build side only answers
     "is there a match"."""
     dates = sorted({str(r["time_period_start"])[:10] for r in rows})
     coins = sorted({r["coin"] for r in rows})
     try:
         existing = _read_days(spark, bronze_path, dates)
-    except AnalysisException:  # first tick: no bronze store yet
+    except AnalysisException:  # first tick of the day: nothing to collide with
         return df
     keys = existing.filter(F.col("coin").isin(coins)).select(
         "coin", "time_period_start"

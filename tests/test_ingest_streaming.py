@@ -313,6 +313,23 @@ def test_bronze_reads_list_only_the_day(spark, tmp_path, monkeypatch):
     assert rows(spark.read.parquet(gold)) == rows(whole)
 
 
+def test_read_days_drops_days_without_a_directory(spark, tmp_path):
+    """Several days are read through one glob: a day with no directory
+    drops out, and a read with no day directory raises like a missing
+    store does."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    bronze = str(tmp_path / "b")
+    ohlcv.append_bars(
+        OhlcvRestSource("k").to_df(spark, ohlcv.fake_bars(n_bars=2)), bronze
+    )
+    assert ohlcv._read_days(spark, bronze, ["2023-04-27", "2023-04-26"]).count() == 6
+    for path in (bronze, str(tmp_path / "missing")):
+        with pytest.raises(AnalysisException):
+            ohlcv._read_days(spark, path, ["2023-04-24", "2023-04-25"])
+
+
 def test_csv_export_contract(spark, tmp_path):
     """K2: headerless, id first — column order load-bearing (SURVEY.md §1)."""
     path = str(tmp_path / "csv")
