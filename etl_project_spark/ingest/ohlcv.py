@@ -127,7 +127,7 @@ def _read_days(
     ``period_date={a,b}`` glob, so a day with no directory drops out;
     raises ``AnalysisException`` when no given day has a directory, a
     missing store included."""
-    days = sorted({f"period_date={d}" for d in dates})
+    days = sorted({f"period_date={str(d)[:10]}" for d in dates})  # date or datetime
     glob = days[0] if len(days) == 1 else "{" + ",".join(days) + "}"
     return (
         spark.read.schema(BRONZE_SCHEMA)
@@ -171,7 +171,8 @@ def export_day(
     except AnalysisException:  # no bronze directory for the day
         return 0
     obs = Observation()
-    _overwrite_partitions(day.observe(obs, F.count(F.lit(1)).alias("n")), gold_path)
+    day = day.observe(obs, F.count(F.lit(1)).alias("n"))
+    _overwrite_partitions(day, gold_path)
     return int(obs.get["n"])
 
 

@@ -521,10 +521,7 @@ def an5_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sum("w").over(Window.partitionBy("src"))
         ).alias("p"),
     ).collect()  # one corpus scan total; <=625 rows by construction
-    trans = local_frame(
-        spark,
-        trans_rows, "src string, dst string, p double"
-    )
+    trans = local_frame(spark, trans_rows, "src string, dst string, p double")
     nodes = (
         trans.select(F.col("src").alias("nation"))
         .union(trans.select(F.col("dst").alias("nation")))

@@ -168,8 +168,7 @@ def _query_cosine_scores(cand: DataFrame, queries: DataFrame) -> DataFrame:
     if not qrows:
         spark = cand.sparkSession
         return local_frame(
-            spark,
-            [], "query_id long, neighbor_id long, sim double"
+            spark, [], "query_id long, neighbor_id long, sim double"
         )
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.array([list(r[1]) for r in qrows], dtype=np.float64)
@@ -901,10 +900,7 @@ def query_ivf_index(
         for i, (qid, _) in enumerate(queries)
         for c in order[i]
     ]
-    qdf = local_frame(
-        spark,
-        qrows, "query_id long, qv array<double>, cell int"
-    )
+    qdf = local_frame(spark, qrows, "query_id long, qv array<double>, cell int")
     probed = sorted({c for _, _, c in qrows})
     idx = spark.table(table).filter(F.col("cell").isin(probed))
     return _cosine_top_k(
