@@ -27,10 +27,13 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterable
-from typing import Any
+from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # the directory holding the ``etl_project_spark`` package
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -116,7 +119,7 @@ def get_spark(
 
 
 def local_frame(
-    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
+    spark: SparkSession, rows: Iterable[Any] | pa.Table, schema: StructType | str
 ) -> DataFrame:
     """Rows held on the driver as a DataFrame that plans as
     ``LocalTableScan``: the rows go to the JVM as one Arrow table, so no
@@ -125,8 +128,9 @@ def local_frame(
 
     A row is a tuple or a ``Row`` (read by position) or a dict (read by
     field name: a missing name is null, an extra key is ignored), as
-    ``createDataFrame`` reads them. ``schema`` is a ``StructType`` or a
-    DDL string."""
+    ``createDataFrame`` reads them. ``rows`` may also be a
+    ``pyarrow.Table``, read by column name (an extra column is ignored).
+    ``schema`` is a ``StructType`` or a DDL string."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -140,8 +144,11 @@ def local_frame(
         return tuple(row)
 
     arrow = to_arrow_schema(schema)
-    columns = list(zip(*map(values, rows))) or [()] * len(names)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
-    )
+    if isinstance(rows, pa.Table):
+        table = rows.select(names).cast(arrow)
+    else:
+        columns = list(zip(*map(values, rows))) or [()] * len(names)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+        )
     return spark.createDataFrame(table, schema)

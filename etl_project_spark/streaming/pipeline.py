@@ -307,10 +307,13 @@ def ingest_loop(
     checkpointing, and restart semantics are Structured Streaming's
     (a restarted query resumes the cadence from the checkpoint; no
     external cron, no Airflow). The foreachBatch side effect is made
-    idempotent at bar granularity (``ingest_tick(dedupe=True)``
-    anti-joins the fetch against bronze's existing (coin,
-    time_period_start) keys), so the at-least-once replay of the last
-    uncommitted micro-batch after a crash appends no duplicate bars.
+    idempotent at bar granularity (``ingest_tick(dedupe=True)`` drops
+    the fetched bars whose (coin, time_period_start) key bronze already
+    holds), so the at-least-once replay of the last uncommitted
+    micro-batch after a crash appends no duplicate bars. The loop is one
+    long-running process, so its ticks share the ingest module's day
+    snapshot: a tick reads only the bronze files written since the last
+    one, not the whole day.
     ``run_available_now`` + ``file_event_stream`` remain the
     deterministic catchup=False twin the tests replay; this is the
     steady-state driver a deployment leaves running. Returns the live

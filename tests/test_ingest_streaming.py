@@ -232,11 +232,12 @@ def test_local_frame_reads_tuples_dicts_and_rows(spark):
     assert "LocalTableScan" in empty._jdf.queryExecution().executedPlan().toString()
 
 
-def test_tick_runs_one_job_first_and_two_with_a_store(spark, tmp_path):
-    """The bronze schema is declared, so a tick infers none: the first
-    tick (no store, so no dedupe) runs only its write job, and a dedupe
-    tick against an existing store runs the keys' broadcast and the
-    write."""
+def test_tick_runs_one_job_first_and_none_on_a_warm_replay(spark, tmp_path):
+    """The bronze schema is declared, so a tick infers none, and a dedupe
+    tick reads only the files the day snapshot has not seen: the first
+    tick (no store, so no dedupe) runs only its write job; a replay reads
+    the first tick's 3 files in one job and writes nothing; a replay
+    against the warm snapshot runs no job at all."""
     bronze = str(tmp_path / "bronze")
     n, jobs = _jobs_run(
         spark, "test:first_tick", ohlcv.ingest_tick, spark, _source(), bronze,
@@ -247,7 +248,12 @@ def test_tick_runs_one_job_first_and_two_with_a_store(spark, tmp_path):
         spark, "test:dedupe_tick", ohlcv.ingest_tick, spark, _source(), bronze,
         "5MIN", 1, True,
     )
-    assert n == 0 and len(jobs) == 2
+    assert n == 0 and len(jobs) == 1
+    n, jobs = _jobs_run(
+        spark, "test:warm_replay", ohlcv.ingest_tick, spark, _source(), bronze,
+        "5MIN", 1, True,
+    )
+    assert n == 0 and jobs == []
 
 
 def test_bronze_schema_is_what_the_tick_writes(spark, tmp_path):
@@ -260,10 +266,58 @@ def test_bronze_schema_is_what_the_tick_writes(spark, tmp_path):
     assert spark.read.parquet(bronze).schema == BRONZE_SCHEMA
 
 
+def _spy_listings(spark, monkeypatch) -> list[list[str]]:
+    """The files every bronze listing (``inputFiles()`` of a day scan)
+    returns from now on, one list per listing."""
+    frame = type(spark.range(1))
+    list_files = frame.inputFiles
+    seen = []
+
+    def spy(df):
+        files = list_files(df)
+        seen.append(files)
+        return files
+
+    monkeypatch.setattr(frame, "inputFiles", spy)
+    return seen
+
+
+def _spy_reads(spark, monkeypatch) -> list[set[str]]:
+    """The local paths of the bronze files each snapshot read brings to
+    the driver from now on, one set per read."""
+    from urllib.parse import unquote, urlparse
+
+    frame = type(spark.range(1))
+    to_arrow = frame.toArrow
+    reads = []
+
+    def spy(df):
+        table = to_arrow(df)
+        if "_file" in table.column_names:
+            files = table["_file"].to_pylist()
+            reads.append({unquote(urlparse(f).path) for f in files})
+        return table
+
+    monkeypatch.setattr(frame, "toArrow", spy)
+    return reads
+
+
+def _day_files(bronze, day) -> set[str]:
+    import os
+
+    return {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(os.path.join(bronze, f"period_date={day}"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
 def test_bronze_reads_list_only_the_day(spark, tmp_path, monkeypatch):
     """A store with many history days: the tick's key scan and
-    ``export_day`` read only the current day's files, and their results
-    are the ones a read of the whole store filtered to the day gives."""
+    ``export_day`` list and read only the current day's files, and their
+    results are the ones a read of the whole store filtered to the day
+    gives."""
     import datetime as dt
     import os
     from urllib.parse import urlparse
@@ -282,29 +336,17 @@ def test_bronze_reads_list_only_the_day(spark, tmp_path, monkeypatch):
         OhlcvRestSource("k").to_df(spark, ohlcv.fake_bars(n_bars=4)), bronze
     )
     day = "2023-04-26"
-    day_dir = os.path.join(bronze, f"period_date={day}")
     assert len([d for d in os.listdir(bronze) if d.startswith("period_date=")]) > 40
 
-    read = ohlcv._read_days
-    seen = []
-
-    def spy(spark_, path, dates):
-        df = read(spark_, path, dates)
-        seen.append(df.inputFiles())
-        return df
-
-    monkeypatch.setattr(ohlcv, "_read_days", spy)
+    seen = _spy_listings(spark, monkeypatch)
+    reads = _spy_reads(spark, monkeypatch)
     assert ohlcv.ingest_tick(spark, _source(), bronze, dedupe=True) == 0
     assert ohlcv.export_day(spark, bronze, gold, day) == 12
     assert len(seen) == 2
-    day_files = {
-        os.path.join(d, f)
-        for d, _, fs in os.walk(day_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    }
+    day_files = _day_files(bronze, day)
     for files in seen:
         assert {urlparse(f).path for f in files} == day_files
+    assert set().union(*reads) == day_files
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
@@ -328,6 +370,179 @@ def test_read_days_drops_days_without_a_directory(spark, tmp_path):
     for path in (bronze, str(tmp_path / "missing")):
         with pytest.raises(AnalysisException):
             ohlcv._read_days(spark, path, ["2023-04-24", "2023-04-25"])
+
+
+def _one_bar_day(spark, bronze, n_bars, start="2023-04-26T00:00:00.0000000Z"):
+    """A bronze day of one file per bar and coin (the 5-minute cadence's
+    layout); returns every bar of the day and the next bar, not written."""
+    bars = ohlcv.fake_bars(start=start, n_bars=n_bars + 1)
+    last = bars[n_bars]["time_period_start"]
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try:
+        ohlcv.append_bars(
+            OhlcvRestSource("k").to_df(
+                spark, [b for b in bars if b["time_period_start"] < last]
+            ),
+            bronze,
+        )
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    return bars, last
+
+
+def _serving(bars, start):
+    """A source that serves, per coin, the bar starting at ``start``."""
+
+    def fetcher(url, headers):
+        sym = url.split("/")[-2].split("_")[2]
+        coin = {"BTC": "bitcoin", "ETH": "ethereum", "XRP": "ripple"}[sym]
+        return [
+            {k: v for k, v in b.items() if k != "coin"}
+            for b in bars
+            if b["coin"] == coin and b["time_period_start"] == start
+        ]
+
+    return OhlcvRestSource("k", fetcher=fetcher)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _store_day(spark, bronze, day):
+    return spark.read.parquet(bronze).filter(F.col("period_date") == F.lit(day))
+
+
+def test_warm_tick_reads_only_the_new_files(spark, tmp_path, monkeypatch):
+    """After a warm read of the day, a tick whose day gained k files
+    (the previous tick's, one per coin) reads exactly those k files, in
+    one job, and keeps the replayed bars out."""
+    bronze, day = str(tmp_path / "b"), "2023-04-26"
+    bars, last = _one_bar_day(spark, bronze, 10)
+    assert ohlcv._read_days(spark, bronze, [day]).count() == 30
+    before = _day_files(bronze, day)
+    assert ohlcv.ingest_tick(spark, _serving(bars, last), bronze, dedupe=True) == 3
+    new = _day_files(bronze, day) - before
+    assert len(new) == 3
+    reads = _spy_reads(spark, monkeypatch)
+    n, jobs = _jobs_run(
+        spark, "test:warm_tick", ohlcv.ingest_tick, spark, _serving(bars, last),
+        bronze, "5MIN", 1, True,
+    )
+    assert n == 0 and len(jobs) == 1
+    assert reads == [new]
+
+
+def test_snapshot_sees_a_file_an_outside_writer_adds(spark, tmp_path):
+    """A bar written into the day by pyarrow after the day was read is
+    seen by the next dedupe (its coin's bar is not appended again) and
+    by ``export_day``."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    bronze, gold, day = str(tmp_path / "b"), str(tmp_path / "g"), "2023-04-26"
+    bars, last = _one_bar_day(spark, bronze, 4)
+    assert ohlcv.export_day(spark, bronze, gold, day) == 12
+    btc = [b for b in bars if b["coin"] == "bitcoin" and b["time_period_start"] == last]
+    table = (
+        OhlcvRestSource("k").to_df(spark, btc).drop("period_date", "coin").toArrow()
+    )
+    part = os.path.join(bronze, f"period_date={day}", "coin=bitcoin")
+    pq.write_table(table, os.path.join(part, "part-backfill-000.parquet"))
+    assert ohlcv.ingest_tick(spark, _serving(bars, last), bronze, dedupe=True) == 2
+    assert ohlcv.export_day(spark, bronze, gold, day) == 15
+    keys = _store_day(spark, bronze, day).select("coin", "time_period_start")
+    assert keys.count() == keys.distinct().count() == 15
+    assert _rows(spark.read.parquet(gold)) == _rows(_store_day(spark, bronze, day))
+
+
+def test_compacted_files_leave_the_snapshot(spark, tmp_path):
+    """``compact_day`` replaces the day's files: the removed files leave
+    the snapshot on the next read, and ``export_day`` gives the whole
+    store filtered to the day, with no row doubled."""
+    from urllib.parse import unquote, urlparse
+
+    bronze, gold, day = str(tmp_path / "b"), str(tmp_path / "g"), "2023-04-26"
+    _one_bar_day(spark, bronze, 8)
+    assert ohlcv.export_day(spark, bronze, gold, day) == 24
+    ohlcv.compact_day(spark, bronze, day)
+    compacted = _day_files(bronze, day)
+    assert len(compacted) == 3
+    assert ohlcv.export_day(spark, bronze, gold, day) == 24
+    (held,) = ohlcv._SNAPSHOT[bronze].values()
+    assert {unquote(urlparse(f).path) for f in held.files} == compacted
+    assert _rows(spark.read.parquet(gold)) == _rows(_store_day(spark, bronze, day))
+    assert spark.read.parquet(gold).distinct().count() == 24
+
+
+def _close_a_day(spark, root):
+    """Ticks (a new bar, its replay), the day's export and compaction on a
+    one-bar-file day: what each step returned, and the stores after."""
+    bronze, gold, day = f"{root}/b", f"{root}/g", "2023-04-26"
+    bars, last = _one_bar_day(spark, bronze, 6)
+    ticks = [
+        ohlcv.ingest_tick(spark, _serving(bars, last), bronze, dedupe=True)
+        for _ in range(2)
+    ]
+    exported = ohlcv.export_day(spark, bronze, gold, day)
+    ohlcv.compact_day(spark, bronze, day)
+    plan = ohlcv._read_days(spark, bronze, [day])._jdf.queryExecution()
+    return (
+        ticks,
+        exported,
+        _rows(spark.read.parquet(gold)),
+        _rows(spark.read.parquet(bronze)),
+        plan.executedPlan().toString(),
+    )
+
+
+def test_scan_path_matches_the_snapshot(spark, tmp_path):
+    """With ``spark.sql.autoBroadcastJoinThreshold=-1`` no day fits the
+    snapshot's bound, so every bronze read is the day scan itself; tick,
+    export and compaction give what the snapshot path gives."""
+    held = _close_a_day(spark, str(tmp_path / "held"))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    try:
+        scanned = _close_a_day(spark, str(tmp_path / "scanned"))
+        assert str(tmp_path / "scanned" / "b") not in ohlcv._SNAPSHOT
+    finally:
+        spark.conf.unset(key)
+    assert held[:2] == scanned[:2] == ([3, 0], 21)
+    assert held[2:4] == scanned[2:4]
+    assert "LocalTableScan" in held[4] and "FileScan" not in held[4]
+    assert "FileScan parquet" in scanned[4]
+
+
+def test_snapshot_bound_evicts_the_oldest_day(spark, tmp_path, monkeypatch):
+    """The snapshot holds at most ``spark.sql.autoBroadcastJoinThreshold``
+    of listed bytes per store: a third day over the bound evicts the
+    least recently read one. A new ``applicationId`` clears it."""
+    bronze = str(tmp_path / "b")
+    days = ["2023-04-26", "2023-04-27", "2023-04-28"]
+    for day in days:
+        _one_bar_day(spark, bronze, 4, start=f"{day}T00:00:00.0000000Z")
+    sizes = []
+    for day in days:
+        ohlcv._read_days(spark, bronze, [day])
+        sizes.append(ohlcv._SNAPSHOT[bronze][(f"period_date={day}",)].nbytes)
+    assert max(sizes) * 2 < sum(sizes) * 0.8  # two days fit, three do not
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(key, str(int(sum(sizes) * 0.8)))
+    try:
+        ohlcv._SNAPSHOT.pop(bronze)
+        for day in days:
+            assert ohlcv._read_days(spark, bronze, [day]).count() == 12
+        assert list(ohlcv._SNAPSHOT[bronze]) == [
+            (f"period_date={day}",) for day in days[1:]
+        ]
+        monkeypatch.setattr(ohlcv, "_SNAPSHOT_APP_ID", "an-earlier-app")
+        ohlcv._read_days(spark, bronze, days[:1])
+        assert list(ohlcv._SNAPSHOT) == [bronze]
+        assert list(ohlcv._SNAPSHOT[bronze]) == [(f"period_date={days[0]}",)]
+    finally:
+        spark.conf.unset(key)
 
 
 def test_csv_export_contract(spark, tmp_path):
