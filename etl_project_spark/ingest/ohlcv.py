@@ -197,10 +197,13 @@ def _read_days(
     files, rows = (held.files & listed, held.rows) if held else (set(), None)
     if held and files != held.files:  # compacted, overwritten or deleted
         rows = rows.filter(pc.is_in(rows["_file"], pa.array(list(files), pa.string())))
-    if rows is None or listed - files:
+    new = listed - files
+    if rows is None or new:
         fresh, file_path = scan, F.col("_metadata.file_path")
-        if files:  # Spark prunes the other files before opening them
-            fresh = scan.filter(file_path.isin(sorted(listed - files)))
+        if len(new) < len(files):  # Spark prunes the other files before opening them
+            fresh = scan.filter(file_path.isin(sorted(new)))
+        else:  # mostly new: the whole day costs less than a filter naming each file
+            rows = None
         fresh = (
             fresh.select("*", file_path.alias("_file"))
             .coalesce(packed)
