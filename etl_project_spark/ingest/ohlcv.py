@@ -30,9 +30,10 @@ bronze day it has read as Arrow on the driver, each row tagged with its
 file, and pays for a file once per process instead of once per read.
 Each call lists the day as before; the files the snapshot has not seen
 are read in one job, filtered on ``_metadata.file_path`` (Spark prunes
-the other files before opening them) and packed into one wave of
-``defaultParallelism`` tasks; a file that left the listing (compacted,
-overwritten, deleted) leaves the snapshot. The day comes back as a ``LocalTableScan``
+the other files before opening them; a day whose files are mostly new is
+read whole, which costs less than a filter naming each file) and packed
+into one wave of ``defaultParallelism`` tasks; a file that left the
+listing (compacted, overwritten, deleted) leaves the snapshot. The day comes back as a ``LocalTableScan``
 (``session.local_frame``). A file is identified by its path, the rule
 Spark's streaming file source uses for seen files: Spark writers never
 rewrite a file in place, and a writer that does is unsupported. Per
