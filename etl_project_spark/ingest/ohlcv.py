@@ -17,61 +17,68 @@ airflow_dags.py:178-314): one day's slice re-written to the gold store.
 
 Small-file problem: the reference ingests 1 row/coin/tick
 (airflow_dags.py:35 limit=1) — naive translation writes pathological tiny
-files, ~288 per coin per day, and Parquet pays a fixed cost per file
-opened (a Hadoop ``Configuration`` clone and a footer read). Every bronze
-day read (the tick's key lookup, ``export_day``, ``compact_day``) goes
-through ``_read_days``, which lists only the given day directories
-(``basePath`` keeps the partition columns) with the declared
-``BRONZE_SCHEMA`` (sources/rest.py), so a read costs one day however old
-the store is and runs no schema-inference job.
+files, ~288 per coin per day, and a Spark Parquet scan pays a fixed cost
+per file opened (a Hadoop ``Configuration`` clone and a footer read).
+Every bronze day read (the tick's key lookup, ``export_day``,
+``compact_day``) goes through ``_read_days``, which lists only the given
+day directories and reads them with the declared ``BRONZE_SCHEMA``
+(sources/rest.py), so a read costs one day however old the store is and
+runs no schema-inference job.
 
 The day snapshot: ``_read_days`` keeps, per process, the rows of each
 bronze day it has read as Arrow on the driver, each row tagged with its
 file, and pays for a file once per process instead of once per read.
-Each call lists the day as before; the files the snapshot has not seen
-are read in one job, filtered on ``_metadata.file_path`` (Spark prunes
-the other files before opening them; a day whose files are mostly new is
-read whole, which costs less than a filter naming each file) and packed
-into one wave of ``defaultParallelism`` tasks; a file that left the
-listing (compacted, overwritten, deleted) leaves the snapshot. The day comes back as a ``LocalTableScan``
-(``session.local_frame``). A file is identified by its path, the rule
-Spark's streaming file source uses for seen files: Spark writers never
-rewrite a file in place, and a writer that does is unsupported. Per
-store, the snapshot holds at most ``spark.sql.autoBroadcastJoinThreshold``
-of listed file bytes (the scan's ``sizeInBytes``, known before anything
-is collected), the bound under which the planner already collects a
-relation onto the driver; the least recently read day goes first, a read
-whose own days exceed the bound gets the packed day scan itself, and a
-new ``applicationId`` starts an empty snapshot. A process per read gets
-no reuse: the gain is for one process that reads a day more than once,
-as the ticks and the day close of a long-running ingest do.
+Each call lists the day directories with pyarrow, skipping the names
+Spark's own listing skips (hidden, ``_``-prefixed, ``._COPYING_``); the
+files the snapshot has not seen are read by one pyarrow dataset on the
+driver, in a fraction of what a Spark scan of the same one-bar files
+costs and with no job, and a file that left the listing (compacted,
+overwritten, deleted) leaves the snapshot. The day comes back as a
+``LocalTableScan`` (``session.local_frame``). A file is identified by
+its path, the rule Spark's streaming file source uses for seen files:
+Spark writers never rewrite a file in place, and a writer that does is
+unsupported. Per store, the snapshot holds at most
+``spark.sql.autoBroadcastJoinThreshold`` of listed file bytes (the
+scan's ``sizeInBytes`` for Parquet, known before anything is read), the
+bound under which the planner already collects a relation onto the
+driver; the least recently read day goes first, and a new
+``applicationId`` starts an empty snapshot. Only stores on the local
+filesystem (no scheme, or ``file:``) are held. A read whose own days
+exceed the bound, and every read of any other store (``s3a://``,
+``abfs://``, ``hdfs://``), get the Spark day scan, packed into one wave
+of ``defaultParallelism`` tasks. A process per read pays the day's
+first read once, and that read runs no job.
 
 A tick's fetched bars become a ``LocalTableScan`` (``session.local_frame``),
 so the tick runs no Python worker. A dedupe tick drops the bars already
-in bronze on the driver, against the day snapshot: it runs one job to
-read the files written since the day was last read (none when nothing
-was) and one to append the bars that are left; a replay whose bars are
-all present writes nothing and, on a warm snapshot, runs no job. A tick
-whose day has no directory yet (the first tick, or the first one past
-midnight) has nothing to collide with and runs only the append.
-``export_day`` counts its rows on the write job itself; ``compact_day``
-is the daily compaction job; the streaming variant in
-etl_project_spark.streaming buffers in micro-batches instead.
+in bronze on the driver, against the day snapshot, and runs one job: the
+append of the bars that are left. A replay whose bars are all present
+writes nothing and runs no job. A tick whose day has no directory yet
+(the first tick, or the first one past midnight) has nothing to collide
+with and runs only the append. ``export_day`` counts its rows on the
+write job itself; ``compact_day`` is the daily compaction job; the
+streaming variant in etl_project_spark.streaming buffers in
+micro-batches instead.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 import threading
 from collections import OrderedDict
 from collections.abc import Iterable
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.fs as pafs
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from etl_project_spark.session import local_frame, prepare
 from etl_project_spark.sources.rest import (
@@ -155,76 +162,108 @@ class _Day:
 _SNAPSHOT: dict[str, OrderedDict[tuple[str, ...], _Day]] = {}
 _SNAPSHOT_APP_ID: str | None = None
 _SNAPSHOT_LOCK = threading.Lock()
+# How the snapshot reads a file: the bronze columns, the partition
+# columns from the hive path under the root, and the file's own path.
+_BRONZE_ARROW = to_arrow_schema(BRONZE_SCHEMA)
+_PARTITIONING = pads.partitioning(
+    pa.schema([_BRONZE_ARROW.field(c) for c in PARTITION_COLS]), flavor="hive"
+)
+_FILE = "__filename"
+_LOCAL_FS = pafs.LocalFileSystem()
 
 
 def _read_days(
     spark: SparkSession, path: str, dates: Iterable[str | dt.date]
 ) -> DataFrame:
     """The rows of the given ``period_date`` partitions: a
-    ``LocalTableScan`` of the day snapshot, after reading the files it
-    has not seen yet (see the module docstring).
+    ``LocalTableScan`` of the day snapshot, after pyarrow has read on the
+    driver the files it has not seen yet (see the module docstring).
 
-    Only those day directories are listed (``basePath`` keeps the
-    partition columns), and the declared ``BRONZE_SCHEMA`` means no
-    schema-inference job. Several days are read through one
-    ``period_date={a,b}`` glob, so a day with no directory drops out;
-    raises ``AnalysisException`` when no given day has a directory, a
-    missing store included. Days whose listed files exceed
-    ``spark.sql.autoBroadcastJoinThreshold`` are not held: the scan
-    itself is returned, packed in one wave of ``defaultParallelism``
+    Only those day directories are listed, with Spark's rules for the
+    names a listing skips, and read with the declared ``BRONZE_SCHEMA``,
+    so a read costs one day however old the store is and runs no job. A
+    day with no directory drops out; raises ``AnalysisException`` when
+    no given day has a directory, a missing store included. A store off
+    the local filesystem, and days that list no data file or whose listed
+    files exceed ``spark.sql.autoBroadcastJoinThreshold``, are not held:
+    they get the day scan, packed in one wave of ``defaultParallelism``
     tasks."""
     global _SNAPSHOT_APP_ID
     # a date, a datetime or an ISO string
     days = tuple(sorted({f"period_date={str(d)[:10]}" for d in dates}))
-    glob = days[0] if len(days) == 1 else "{" + ",".join(days) + "}"
-    root = path.rstrip("/")
-    scan = (
-        spark.read.schema(BRONZE_SCHEMA)
-        .option("basePath", path)
-        .parquet(f"{root}/{glob}")
-    )
-    packed = spark.sparkContext.defaultParallelism
+    root = _local_root(path)
+    listed = _list_days(root, days) if root else {}
+    nbytes = sum(listed.values())
     bound = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    nbytes = int(scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     app_id = spark.sparkContext.applicationId
     with _SNAPSHOT_LOCK:
         if app_id != _SNAPSHOT_APP_ID:
             _SNAPSHOT.clear()
             _SNAPSHOT_APP_ID = app_id
         held = _SNAPSHOT.get(root, {}).pop(days, None)
-    if nbytes > bound:  # too large to hold: the scan is the one way to serve it
-        return scan.coalesce(packed)
-    listed = {_metadata_spelling(f) for f in scan.inputFiles()}
-    files, rows = (held.files & listed, held.rows) if held else (set(), None)
-    if held and files != held.files:  # compacted, overwritten or deleted
-        rows = rows.filter(pc.is_in(rows["_file"], pa.array(list(files), pa.string())))
-    new = listed - files
-    if rows is None or new:
-        fresh, file_path = scan, F.col("_metadata.file_path")
-        if len(new) < len(files):  # Spark prunes the other files before opening them
-            fresh = scan.filter(file_path.isin(sorted(new)))
-        else:  # mostly new: the whole day costs less than a filter naming each file
-            rows = None
-        fresh = (
-            fresh.select("*", file_path.alias("_file"))
-            .coalesce(packed)
-            .toArrow()
+    # not local, too large to hold, or no data file (the scan raises when
+    # no day has a directory)
+    if not listed or nbytes > bound:
+        glob = days[0] if len(days) == 1 else "{" + ",".join(days) + "}"
+        scan = (
+            spark.read.schema(BRONZE_SCHEMA)
+            .option("basePath", path)
+            .parquet(f"{path.rstrip('/')}/{glob}")
         )
+        return scan.coalesce(spark.sparkContext.defaultParallelism)
+    files, rows = (held.files & listed.keys(), held.rows) if held else (set(), None)
+    if held and files != held.files:  # compacted, overwritten or deleted
+        rows = rows.filter(pc.is_in(rows[_FILE], pa.array(list(files), pa.string())))
+    new = listed.keys() - files
+    if new:
+        fresh = pads.dataset(
+            sorted(new),
+            schema=_BRONZE_ARROW,
+            format="parquet",
+            partitioning=_PARTITIONING,
+            partition_base_dir=root,
+            filesystem=_LOCAL_FS,
+        ).to_table(columns=[*_BRONZE_ARROW.names, _FILE])
         rows = fresh if rows is None else pa.concat_tables([rows, fresh])
     with _SNAPSHOT_LOCK:
         snapshot = _SNAPSHOT.setdefault(root, OrderedDict())
-        snapshot[days] = _Day(listed, rows, nbytes)
+        snapshot[days] = _Day(set(listed), rows, nbytes)
         while sum(e.nbytes for e in snapshot.values()) > bound:
             snapshot.popitem(last=False)
     return local_frame(spark, rows, BRONZE_SCHEMA)
 
 
-def _metadata_spelling(path: str) -> str:
-    """A path as ``_metadata.file_path`` spells it: ``inputFiles()``
-    spells a local file ``file:///p``, the metadata column ``file:/p``."""
-    if path.startswith("file:///"):
-        return "file:/" + path[len("file:///") :]
-    return path
+def _local_root(path: str) -> str | None:
+    """The absolute local path of a store root with no scheme or a
+    ``file:`` one (a relative path is taken from the working directory,
+    as Spark takes it); ``None`` for any other scheme."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    return os.path.abspath(url.path if url.scheme else path)
+
+
+def _list_days(root: str, days: tuple[str, ...]) -> dict[str, int]:
+    """Path → size of every data file under the given day directories (a
+    missing one lists nothing), skipping what Spark's listing skips
+    (``HadoopFSUtils``): hidden (``.``) and metadata (``_`` without
+    ``=``) names, at any depth, files still being copied, and empty
+    files."""
+    return {
+        f.path: f.size
+        for day in days
+        for f in _LOCAL_FS.get_file_info(
+            pafs.FileSelector(f"{root}/{day}", allow_not_found=True, recursive=True)
+        )
+        if f.type == pafs.FileType.File
+        and f.size > 0
+        and not any(
+            (name.startswith("_") and "=" not in name)
+            or name.startswith(".")
+            or name.endswith("._COPYING_")
+            for name in f.path[len(root) + len(day) + 2 :].split("/")
+        )
+    }
 
 
 def append_bars(df: DataFrame, bronze_path: str) -> None:

@@ -116,17 +116,31 @@ def write_csv_export(
 ) -> None:
     """K2: headerless CSV export, id first (column order load-bearing).
 
-    A frame without the id column gets one assigned via
-    :func:`with_surrogate_id` (``id_mode``/``order_by`` forwarded), so
-    the reference's SERIAL-id-first positional contract
+    A frame without the id column gets one assigned, ``id_mode`` and
+    ``order_by`` read as :func:`with_surrogate_id` reads them, so the
+    reference's SERIAL-id-first positional contract
     (airflow_dags.py:66-69) reproduces byte-for-byte from an id-less
     day slice.
 
     ``single_file=True`` reproduces the reference's one-file-per-day
     contract via coalesce(1) — only sane for small daily slices; leave
-    False at scale to write one file per partition."""
+    False at scale to write one file per partition. A single-file dense
+    export numbers its rows inside its one write job: the one partition
+    is sorted by ``order_by`` (left in incoming order without it), and
+    ``monotonically_increasing_id`` is dense in partition 0, so it
+    needs none of :func:`with_surrogate_id`'s count pass, checkpoint
+    or range sampling."""
+    from pyspark.sql import functions as F
+
     if CSV_EXPORT_FIRST_COL not in df.columns:
-        df = with_surrogate_id(df, mode=id_mode, order_by=order_by)
+        if single_file and id_mode == "dense":
+            one = df.coalesce(1)
+            if order_by:
+                one = one.sortWithinPartitions(*order_by)
+            sid = F.monotonically_increasing_id() + 1
+            df = one.select(sid.alias(CSV_EXPORT_FIRST_COL), "*")
+        else:
+            df = with_surrogate_id(df, mode=id_mode, order_by=order_by)
     cols = [CSV_EXPORT_FIRST_COL] + [
         c for c in df.columns if c != CSV_EXPORT_FIRST_COL
     ]

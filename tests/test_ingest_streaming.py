@@ -234,10 +234,11 @@ def test_local_frame_reads_tuples_dicts_and_rows(spark):
 
 def test_tick_runs_one_job_first_and_none_on_a_warm_replay(spark, tmp_path):
     """The bronze schema is declared, so a tick infers none, and a dedupe
-    tick reads only the files the day snapshot has not seen: the first
-    tick (no store, so no dedupe) runs only its write job; a replay reads
-    the first tick's 3 files in one job and writes nothing; a replay
-    against the warm snapshot runs no job at all."""
+    tick reads the files the day snapshot has not seen with pyarrow on
+    the driver: the first tick (no store, so no dedupe) runs only its
+    write job; a replay reads the first tick's 3 files without a job and
+    writes nothing; a replay against the warm snapshot runs no job
+    either."""
     bronze = str(tmp_path / "bronze")
     n, jobs = _jobs_run(
         spark, "test:first_tick", ohlcv.ingest_tick, spark, _source(), bronze,
@@ -248,7 +249,7 @@ def test_tick_runs_one_job_first_and_none_on_a_warm_replay(spark, tmp_path):
         spark, "test:dedupe_tick", ohlcv.ingest_tick, spark, _source(), bronze,
         "5MIN", 1, True,
     )
-    assert n == 0 and len(jobs) == 1
+    assert n == 0 and jobs == []
     n, jobs = _jobs_run(
         spark, "test:warm_replay", ohlcv.ingest_tick, spark, _source(), bronze,
         "5MIN", 1, True,
@@ -266,39 +267,32 @@ def test_bronze_schema_is_what_the_tick_writes(spark, tmp_path):
     assert spark.read.parquet(bronze).schema == BRONZE_SCHEMA
 
 
-def _spy_listings(spark, monkeypatch) -> list[list[str]]:
-    """The files every bronze listing (``inputFiles()`` of a day scan)
-    returns from now on, one list per listing."""
-    frame = type(spark.range(1))
-    list_files = frame.inputFiles
+def _spy_listings(monkeypatch) -> list[list[str]]:
+    """The files every bronze listing (``_list_days``) returns from now
+    on, one list per listing."""
+    list_days = ohlcv._list_days
     seen = []
 
-    def spy(df):
-        files = list_files(df)
-        seen.append(files)
+    def spy(root, days):
+        files = list_days(root, days)
+        seen.append(list(files))
         return files
 
-    monkeypatch.setattr(frame, "inputFiles", spy)
+    monkeypatch.setattr(ohlcv, "_list_days", spy)
     return seen
 
 
-def _spy_reads(spark, monkeypatch) -> list[set[str]]:
-    """The local paths of the bronze files each snapshot read brings to
-    the driver from now on, one set per read."""
-    from urllib.parse import unquote, urlparse
-
-    frame = type(spark.range(1))
-    to_arrow = frame.toArrow
+def _spy_reads(monkeypatch) -> list[set[str]]:
+    """The paths of the bronze files each snapshot read (one pyarrow
+    dataset) brings to the driver from now on, one set per read."""
+    dataset = ohlcv.pads.dataset
     reads = []
 
-    def spy(df):
-        table = to_arrow(df)
-        if "_file" in table.column_names:
-            files = table["_file"].to_pylist()
-            reads.append({unquote(urlparse(f).path) for f in files})
-        return table
+    def spy(paths, **kwargs):
+        reads.append(set(paths))
+        return dataset(paths, **kwargs)
 
-    monkeypatch.setattr(frame, "toArrow", spy)
+    monkeypatch.setattr(ohlcv.pads, "dataset", spy)
     return reads
 
 
@@ -320,7 +314,6 @@ def test_bronze_reads_list_only_the_day(spark, tmp_path, monkeypatch):
     gives."""
     import datetime as dt
     import os
-    from urllib.parse import urlparse
 
     bronze, gold = str(tmp_path / "b"), str(tmp_path / "g")
     history = [
@@ -338,14 +331,14 @@ def test_bronze_reads_list_only_the_day(spark, tmp_path, monkeypatch):
     day = "2023-04-26"
     assert len([d for d in os.listdir(bronze) if d.startswith("period_date=")]) > 40
 
-    seen = _spy_listings(spark, monkeypatch)
-    reads = _spy_reads(spark, monkeypatch)
+    seen = _spy_listings(monkeypatch)
+    reads = _spy_reads(monkeypatch)
     assert ohlcv.ingest_tick(spark, _source(), bronze, dedupe=True) == 0
     assert ohlcv.export_day(spark, bronze, gold, day) == 12
     assert len(seen) == 2
     day_files = _day_files(bronze, day)
     for files in seen:
-        assert {urlparse(f).path for f in files} == day_files
+        assert set(files) == day_files
     assert set().union(*reads) == day_files
 
     def rows(df):
@@ -415,8 +408,8 @@ def _store_day(spark, bronze, day):
 
 def test_warm_tick_reads_only_the_new_files(spark, tmp_path, monkeypatch):
     """After a warm read of the day, a tick whose day gained k files
-    (the previous tick's, one per coin) reads exactly those k files, in
-    one job, and keeps the replayed bars out."""
+    (the previous tick's, one per coin) reads exactly those k files, with
+    no job, and keeps the replayed bars out."""
     bronze, day = str(tmp_path / "b"), "2023-04-26"
     bars, last = _one_bar_day(spark, bronze, 10)
     assert ohlcv._read_days(spark, bronze, [day]).count() == 30
@@ -424,12 +417,12 @@ def test_warm_tick_reads_only_the_new_files(spark, tmp_path, monkeypatch):
     assert ohlcv.ingest_tick(spark, _serving(bars, last), bronze, dedupe=True) == 3
     new = _day_files(bronze, day) - before
     assert len(new) == 3
-    reads = _spy_reads(spark, monkeypatch)
+    reads = _spy_reads(monkeypatch)
     n, jobs = _jobs_run(
         spark, "test:warm_tick", ohlcv.ingest_tick, spark, _serving(bars, last),
         bronze, "5MIN", 1, True,
     )
-    assert n == 0 and len(jobs) == 1
+    assert n == 0 and jobs == []
     assert reads == [new]
 
 
@@ -476,6 +469,57 @@ def test_compacted_files_leave_the_snapshot(spark, tmp_path):
     assert spark.read.parquet(gold).distinct().count() == 24
 
 
+def test_day_listing_skips_what_spark_skips(spark, tmp_path):
+    """A day directory that also holds a ``_SUCCESS`` marker, checksum
+    files, a file still being copied, an empty data file and a
+    ``_temporary`` attempt directory reads exactly the rows Spark's own
+    read of the store gives for the day: none of those files is read or
+    held."""
+    import os
+    import shutil
+
+    bronze, day = str(tmp_path / "b"), "2023-04-26"
+    _one_bar_day(spark, bronze, 3)
+    part = os.path.join(bronze, f"period_date={day}", "coin=bitcoin")
+    data = sorted(f for f in os.listdir(part) if f.endswith(".parquet"))[0]
+    attempt = os.path.join(part, "_temporary", "0")
+    os.makedirs(attempt)
+    for copy in (
+        os.path.join(attempt, data),  # a bar twice, if it were read
+        os.path.join(part, data + "._COPYING_"),
+        os.path.join(part, "." + data),
+    ):
+        shutil.copy(os.path.join(part, data), copy)
+    for marker in (
+        "_SUCCESS",
+        "coin=bitcoin/_SUCCESS",
+        "coin=bitcoin/.part-0.crc",
+        "coin=bitcoin/part-empty.parquet",  # Spark skips an empty file
+    ):
+        open(os.path.join(bronze, f"period_date={day}", marker), "w").close()
+    assert _rows(ohlcv._read_days(spark, bronze, [day])) == _rows(
+        _store_day(spark, bronze, day)
+    )
+    (held,) = ohlcv._SNAPSHOT[bronze].values()
+    assert len(held.files) == 9 and held.rows.num_rows == 9
+
+
+def test_uri_and_relative_roots_share_the_snapshot(spark, tmp_path, monkeypatch):
+    """A ``file:`` URI and a relative path name the same local store as
+    its absolute path: the same rows, one snapshot entry under the
+    absolute path, and the day's files read once."""
+    import os
+
+    bronze, day = str(tmp_path / "b"), "2023-04-26"
+    _one_bar_day(spark, bronze, 3)
+    want = _rows(_store_day(spark, bronze, day))
+    reads = _spy_reads(monkeypatch)
+    for root in (bronze, f"file://{bronze}", f"file:{bronze}/", os.path.relpath(bronze)):
+        assert _rows(ohlcv._read_days(spark, root, [day])) == want
+    assert [len(r) for r in reads] == [9]
+    assert [k for k in ohlcv._SNAPSHOT if k.startswith(str(tmp_path))] == [bronze]
+
+
 def _close_a_day(spark, root):
     """Ticks (a new bar, its replay), the day's export and compaction on a
     one-bar-file day: what each step returned, and the stores after."""
@@ -497,9 +541,10 @@ def _close_a_day(spark, root):
     )
 
 
-def test_scan_path_matches_the_snapshot(spark, tmp_path):
+def test_scan_path_matches_the_snapshot(spark, tmp_path, monkeypatch):
     """With ``spark.sql.autoBroadcastJoinThreshold=-1`` no day fits the
-    snapshot's bound, so every bronze read is the day scan itself; tick,
+    snapshot's bound, and a store off the local filesystem is never
+    held, so every bronze read of either is the day scan itself; tick,
     export and compaction give what the snapshot path gives."""
     held = _close_a_day(spark, str(tmp_path / "held"))
     key = "spark.sql.autoBroadcastJoinThreshold"
@@ -509,10 +554,14 @@ def test_scan_path_matches_the_snapshot(spark, tmp_path):
         assert str(tmp_path / "scanned" / "b") not in ohlcv._SNAPSHOT
     finally:
         spark.conf.unset(key)
-    assert held[:2] == scanned[:2] == ([3, 0], 21)
-    assert held[2:4] == scanned[2:4]
+    with monkeypatch.context() as m:  # as an s3a:// or hdfs:// root would be
+        m.setattr(ohlcv, "_local_root", lambda path: None)
+        remote = _close_a_day(spark, str(tmp_path / "remote"))
+    assert str(tmp_path / "remote" / "b") not in ohlcv._SNAPSHOT
+    assert held[:2] == scanned[:2] == remote[:2] == ([3, 0], 21)
+    assert held[2:4] == scanned[2:4] == remote[2:4]
     assert "LocalTableScan" in held[4] and "FileScan" not in held[4]
-    assert "FileScan parquet" in scanned[4]
+    assert "FileScan parquet" in scanned[4] and "FileScan parquet" in remote[4]
 
 
 def test_snapshot_bound_evicts_the_oldest_day(spark, tmp_path, monkeypatch):
@@ -1094,18 +1143,45 @@ def test_surrogate_id_unique_mode(spark):
 
 def test_csv_export_assigns_id_when_missing(spark, tmp_path):
     """An id-less day slice exports with a dense 1-based id first —
-    the reference's SERIAL contract reproduced end to end."""
+    the reference's SERIAL contract reproduced end to end. The one-file
+    export runs only its write job and writes the bytes the multi-file
+    numbering gives."""
+    from etl_project_spark.sources.files import with_surrogate_id
+
     path = str(tmp_path / "csv_id")
     df = spark.createDataFrame(
         [(30.5, "c"), (10.5, "a"), (20.5, "b")], "volume double, name string"
     )
-    write_csv_export(df, path, single_file=True, order_by=["name"])
+    _, jobs = _jobs_run(
+        spark, "test:csv_export", write_csv_export, df, path, True, "dense", ["name"]
+    )
+    assert len(jobs) == 1  # the ids are numbered inside the write job
     back = read_csv(
         spark, path, schema="id long, volume double, name string", header=False
     )
     rows = sorted(back.collect(), key=lambda r: r["id"])
     assert [r["id"] for r in rows] == [1, 2, 3]
     assert [r["name"] for r in rows] == ["a", "b", "c"]
+    # the same file the multi-file numbering gives, written as one file
+    ref = str(tmp_path / "csv_ref")
+    with_surrogate_id(df, order_by=["name"]).coalesce(1).write.csv(ref)
+    assert _csv_bytes(path) == _csv_bytes(ref)
+    # without order_by: the incoming order, still dense from 1
+    many = spark.range(0, 50, numPartitions=4).select((F.col("id") * 2).alias("v"))
+    write_csv_export(many, str(tmp_path / "csv_unordered"), single_file=True)
+    back = read_csv(spark, str(tmp_path / "csv_unordered"), schema="id long, v long")
+    assert sorted((r["id"], r["v"]) for r in back.collect()) == [
+        (i + 1, 2 * i) for i in range(50)
+    ]
+
+
+def _csv_bytes(path) -> bytes:
+    """The data files of a CSV directory, concatenated in name order."""
+    import glob
+
+    return b"".join(
+        open(f, "rb").read() for f in sorted(glob.glob(f"{path}/part-*"))
+    )
 
 
 def test_dsir_vocab_stream_replays_to_batch_pp7(spark, sf_dir, tmp_path):
