@@ -28,8 +28,8 @@ runs no schema-inference job.
 The day snapshot: ``_read_days`` keeps, per process, the rows of each
 bronze day it has read as Arrow on the driver, each row tagged with its
 file, and pays for a file once per process instead of once per read.
-Each call lists the day directories with pyarrow, skipping the names
-Spark's own listing skips (hidden, ``_``-prefixed, ``._COPYING_``); the
+Each call lists the day directories with pyarrow, skipping what Spark's
+own listing skips (hidden, ``_``-prefixed, ``._COPYING_``, empty); the
 files the snapshot has not seen are read by one pyarrow dataset on the
 driver, in a fraction of what a Spark scan of the same one-bar files
 costs and with no job, and a file that left the listing (compacted,
